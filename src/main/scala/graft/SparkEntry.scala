@@ -869,9 +869,9 @@ object SparkEntry {
     }),
 
     "qc_ts_normalize" -> ((s, dir) => {
-      // P8: subtract-first-timestamp normalization. Eager t0 (scalar min via
-      // the column-pruned ts-only pass) keeps the returned plan at exactly
-      // one regex-parse of the input.
+      // P8: subtract-first-timestamp normalization. Eager t0 (scalar min
+      // computed now) keeps the returned plan at exactly one parse of the
+      // input.
       val frames = CandumpParser.parseLines(canLines(events(s, dir)))
       CandumpParser.withTsMsEager(frames)
         .select(col("can_id"), col("ts_ms"))

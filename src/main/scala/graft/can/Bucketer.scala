@@ -365,11 +365,17 @@ object Bucketer {
     * Degenerates gracefully: a stream with no gaps > cacheMs is one
     * segment (the honest sequential case); real telemetry at ms-scale
     * windows has gaps everywhere, giving near-linear parallelism.
+    *
+    * `forwardFill = true` applies [[ForwardFill.distributed]] to the fold
+    * before the result is persisted — equivalent to the fold's in-pass
+    * carry, because observed values always win over carried ones under
+    * either combine policy — so the filled rows are what the caller owns.
     */
   def exactDistributed(wide: org.apache.spark.sql.DataFrame, cacheMs: Double,
       policy: CombinePolicy = CombinePolicy.LastWins,
       numPartitions: Int = 0,
-      frameCounter: Option[org.apache.spark.util.LongAccumulator] = None)
+      frameCounter: Option[org.apache.spark.util.LongAccumulator] = None,
+      forwardFill: Boolean = false)
       : org.apache.spark.sql.DataFrame = {
     require(cacheMs > 0,
       s"cacheMs must be positive, got $cacheMs (cacheMs <= 0 means " +
@@ -447,9 +453,10 @@ object Bucketer {
       }, withSegSchema)
 
     try {
-      val result = exactFold(withSeg, cacheMs, Seq("_seg"), policy,
+      val folded = exactFold(withSeg, cacheMs, Seq("_seg"), policy,
           forwardFill = false)
         .drop("_seg")
+      val result = (if (forwardFill) ForwardFill.distributed(folded, TimeCol) else folded)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try result.count() // materialize while `sorted` is still cached
       catch { case e: Throwable => result.unpersist(); throw e }

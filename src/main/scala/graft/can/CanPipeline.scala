@@ -40,14 +40,12 @@ object CanPipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** OWNERSHIP NOTE: two configurations return a persisted + materialized
-    * frame rather than a lazy plan — `exact = true` with no `exactKeys`
-    * (the keyless distributed-exact path, [[Bucketer.exactDistributed]]'s
-    * contract) and `forwardFill = true` ([[ForwardFill.distributed]]'s) —
-    * because those folds must release their corpus-sized sorted-input
-    * caches before returning. Long-running sessions should
-    * `result.unpersist()` once done consuming it; everywhere else the
-    * call is a no-op.
+  /** OWNERSHIP NOTE: `exact = true` with no `exactKeys` (the keyless
+    * distributed-exact path, [[Bucketer.exactDistributed]]'s contract)
+    * returns a persisted + materialized frame rather than a lazy plan,
+    * because that fold must release its corpus-sized sorted-input cache
+    * before returning. Long-running sessions should `result.unpersist()`
+    * once done consuming it; everywhere else the call is a no-op.
     */
   def decodeLog(spark: SparkSession, dbcPath: String, logPath: String,
       cfg: CanPipelineConfig = CanPipelineConfig()): DataFrame = {
@@ -103,9 +101,8 @@ object CanPipeline {
         // keyed: independent folds per key, forward-fill in-pass
         Bucketer.exactFold(wide, cfg.cacheMs, cfg.exactKeys, cfg.combine, cfg.forwardFill)
       else {
-        // keyless: gap-segmented distributed exact fold; post-hoc
-        // distributed fill is equivalent to in-pass carry (observed values
-        // always win over carried ones under either combine policy).
+        // keyless: gap-segmented distributed exact fold, filled inside
+        // it before its result is persisted.
         // T7: frames counted in its pass 1 via accumulator — the observe
         // node was skipped above (sampling-pass double count), and RDD
         // actions would never deliver it anyway
@@ -113,16 +110,8 @@ object CanPipeline {
           if (cfg.observeMetrics)
             Some(PipelineMetrics.newExactFramesCounter(frames0.sparkSession))
           else None
-        val b = Bucketer.exactDistributed(wide, cfg.cacheMs, cfg.combine,
-          frameCounter = counter)
-        if (cfg.forwardFill) {
-          // the filled result is materialized before distributed()
-          // returns, so the intermediate exact fold — whose blocks we
-          // own per its contract — releases here, not at the caller
-          val filled = ForwardFill.distributed(b, DbcColumns.TimeCol)
-          b.unpersist()
-          filled
-        } else b
+        Bucketer.exactDistributed(wide, cfg.cacheMs, cfg.combine,
+          frameCounter = counter, forwardFill = cfg.forwardFill)
       }
     } else {
       val frameLevel = cfg.cacheMs > 0 && cfg.frameLevelTumbling.getOrElse(

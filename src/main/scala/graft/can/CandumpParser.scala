@@ -1,7 +1,8 @@
 package graft.can
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.CandumpLine
 
 /** Candump text-line parsing (reference P1/F2/P8):
   * `"(1694651234.123456) can0 123#DEADBEEF"` →
@@ -13,24 +14,22 @@ import org.apache.spark.sql.functions._
   * skip path, `candump_parse.h:44-56`). Remote-frame `R` payloads decode to
   * empty payloads like the reference (the `#R` branch yields no data bytes).
   *
-  * All parsing is built-in expressions (`regexp_extract`/`conv`/`unhex`) so
-  * the whole stage is codegen'd and usable identically in batch
-  * (`spark.read.text`) and streaming (`readStream` text/socket) plans.
+  * Each line is parsed by one codegen expression, [[CandumpLine]], in a
+  * single regex-free pass over its bytes, so the stage is whole-stage
+  * codegen'd and usable identically in batch (`readLog`, `--stdin`) and
+  * streaming (`readStream` text/socket) plans. [[LineRe]] is its
+  * specification and test oracle.
   */
 object CandumpParser {
 
-  /** Extraction regex. Group 1 = epoch whole seconds, 2 = fractional digits,
-    * 3 = iface, 4 = hex id, 5 = hex payload (may be empty; `R` = remote
-    * frame → no payload).
+  /** The line grammar, as a regex: the specification [[CandumpLine]]
+    * implements and the oracle its property spec compares against. Group
+    * 1 = epoch whole seconds, 2 = fractional digits, 3 = iface, 4 = hex
+    * id, 5 = hex payload (may be empty; `R` = remote frame → no payload).
     *
     * Quantifiers are bounded (11 second digits ≈ year 5138, 9 fractional,
     * 8 hex id digits = the 29-bit extended-id space) so a line that passes
-    * the gate can never overflow the integer extraction — which lets the
-    * malformed-line filter (F2) be a single cheap `RLIKE` instead of
-    * per-field null checks. That matters for plan shape: predicate pushdown
-    * substitutes filter expressions through exchanges, and a multi-extract
-    * null filter would re-evaluate its (possibly expensive) input once per
-    * field on the pre-shuffle side.
+    * can never overflow the integer extraction.
     *
     * 11 second digits, not the previous 13: `sec · 10⁶` must stay under
     * 2⁶³ ≈ 9.2·10¹⁸. The hard overflow line is 13 digits (9.99…·10¹² ·
@@ -43,7 +42,7 @@ object CandumpParser {
     */
   private[can] val LineRe = """^\s*\((\d{1,11})\.?(\d{0,9})\)\s+(\S+)\s+([0-9A-Fa-f]{1,8})#R?([0-9A-Fa-f]*)\s*$"""
 
-  /** Parse a DataFrame of raw lines (column `value`) into frames.
+  /** Parse a DataFrame of raw lines (column `col`) into frames.
     * Output: `ts_us: long, iface: string, can_id: long, data: binary`.
     * Malformed lines → dropped (F2).
     *
@@ -51,30 +50,13 @@ object CandumpParser {
     * fractional digits, and epoch-scale doubles cannot represent them (the
     * reference's double math drifts by ~1e-4 ms at epoch scale; integer
     * micros make later subtraction exact).
+    *
+    * `inline` over [[CandumpLine]] parses each line once and drops the
+    * malformed ones in the same step; no filter on the parse result can be
+    * pushed below it and re-evaluate the parse.
     */
-  def parseLines(lines: DataFrame, col: String = "value"): DataFrame = {
-    val c = lines(col)
-    val sec = regexp_extract(c, LineRe, 1)
-    val frac = regexp_extract(c, LineRe, 2)
-    val iface = regexp_extract(c, LineRe, 3)
-    val idHex = regexp_extract(c, LineRe, 4)
-    val dataHex = regexp_extract(c, LineRe, 5)
-    // cap at 8 bytes (16 hex chars), drop any trailing odd nibble —
-    // candump_parse.h:86-90 walks hex pairs and stops at 8 bytes
-    val evenHex = expr(s"substring($dataHexAlias, 1, least(16, length($dataHexAlias) - length($dataHexAlias) % 2))")
-    lines
-      .filter(c.rlike(LineRe)) // F2: one-regex validity gate
-      .withColumn(dataHexAlias, dataHex)
-      .withColumn("ts_us",
-        sec.cast("long") * 1000000L +
-          rpad(substring(frac, 1, 6), 6, "0").cast("long"))
-      .withColumn("iface", iface)
-      .withColumn("can_id", conv(idHex, 16, -10).cast("long"))
-      .withColumn("data", unhex(evenHex))
-      .select("ts_us", "iface", "can_id", "data")
-  }
-
-  private val dataHexAlias = "_data_hex"
+  def parseLines(lines: DataFrame, col: String = "value"): DataFrame =
+    lines.select(inline(CandumpLine(lines(col))))
 
   /** P8 timestamp normalization: `ts_ms = (ts_s - t0) * 1000` with t0 the
     * dataset minimum (the reference uses the first line's ts,
@@ -85,25 +67,24 @@ object CandumpParser {
     * Implemented as an aggregate + broadcast cross join of the 1-row min —
     * NOT a global window (which would force all data through a single
     * partition; the 1-row broadcast join keeps the scan fully parallel at
-    * any scale).
+    * any scale). The t0 branch re-reads and re-parses the input (one
+    * [[CandumpLine]] per line, no regex); [[withTsMsEager]] avoids the
+    * second branch where an eager action is acceptable.
     */
   def withTsMs(frames: DataFrame, adjust: Boolean = true): DataFrame =
     if (!adjust) frames.withColumn("ts_ms", col("ts_us") / 1000.0).drop("ts_us")
     else {
-      // Catalyst column-prunes the agg branch down to the two ts regex
-      // fields + the RLIKE gate (verified on the optimized plan), so this is
-      // a cheap ts-only pass + the full parse — not two full parses.
       val t0 = frames.agg(min("ts_us").as("_t0"))
       frames.crossJoin(broadcast(t0))
         .withColumn("ts_ms", (col("ts_us") - col("_t0")) / 1000.0)
         .drop("ts_us", "_t0")
     }
 
-  /** [[withTsMs]] with t0 resolved eagerly: runs the (column-pruned,
-    * ts-only) min aggregate now and embeds the result as a literal, so the
-    * RETURNED plan contains exactly one regex-parse of the input — no join,
-    * no second branch. Batch-only (an eager action can't sit in a streaming
-    * plan); prefer this form when the frame source is expensive to re-scan.
+  /** [[withTsMs]] with t0 resolved eagerly: runs the min aggregate now
+    * and embeds the result as a literal, so the RETURNED plan parses the
+    * input exactly once — no join, no second branch. Batch-only (an eager
+    * action can't sit in a streaming plan); prefer this form when the
+    * frame source is expensive to re-scan.
     */
   def withTsMsEager(frames: DataFrame): DataFrame = {
     val row = frames.agg(min("ts_us")).head()
@@ -115,12 +96,38 @@ object CandumpParser {
   }
 
   /** Full source: candump log file(s) → frames with normalized ts_ms.
-    * S1 (`spark.read.text` is splittable and parallel over large logs —
-    * the 100 TB path is many log files / large line-split files).
+    * S1: the input is read as Hadoop text splits, at least
+    * `defaultParallelism` of them for a log of any size, so a single log
+    * is parsed on every core. (The file source would plan one split per
+    * `spark.sql.files.openCostInBytes` — 4 MB by default — and leave most
+    * cores idle on logs under cores × 4 MB; changing that conf would
+    * change every other scan in the session.) A large log still splits
+    * by block size, and each file is at least one split: a directory of
+    * many small logs gets one task per file.
     */
   def readLog(spark: org.apache.spark.sql.SparkSession, path: String,
       adjustTimestamp: Boolean = true): DataFrame =
-    withTsMs(parseLines(spark.read.text(path)), adjustTimestamp)
+    withTsMs(parseLines(textLines(spark, path)), adjustTimestamp)
+
+  /** The lines of the file(s) at `path` as a `value` column, in at least
+    * `defaultParallelism` input splits. Each Hadoop `Text` is copied
+    * straight into a `UTF8String` — no decode to a Java string and back.
+    */
+  private[can] def textLines(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val sc = spark.sparkContext
+    val rows = sc.hadoopFile(path, classOf[org.apache.hadoop.mapred.TextInputFormat],
+        classOf[org.apache.hadoop.io.LongWritable], classOf[org.apache.hadoop.io.Text],
+        sc.defaultParallelism)
+      .map { case (_, t) =>
+        org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromBytes(
+            java.util.Arrays.copyOf(t.getBytes, t.getLength)))
+      }
+    org.apache.spark.sql.graftshim.Shims.internalDataFrame(spark, rows,
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField(
+        "value", org.apache.spark.sql.types.StringType))))
+  }
 
   /** Reference-fidelity replay (opt-in): reproduces two initialization
     * quirks of the reference's sequential file reader that the default
@@ -167,14 +174,11 @@ object CandumpParser {
     // g + eofBadRun (g itself was already emitted by the call before the
     // failing one); leading bad lines precede every good line and so
     // never form a (good, next_good) gap
-    val tsUs = regexp_extract(col("value"), LineRe, 1).cast("long") * 1000000L +
-      rpad(substring(regexp_extract(col("value"), LineRe, 2), 1, 6), 6, "0")
-        .cast("long")
-    val b = indexed.filter(col("value").rlike(LineRe))
+    val b = indexed.select(col("_line_idx"), inline(CandumpLine(col("value"))))
       .withColumn("_nxt",
         lead(col("_line_idx"), 1).over(Window.orderBy("_line_idx")))
       .agg(
-        min(struct(col("_line_idx").as("_i"), tsUs.as("_ts"))).as("_first"),
+        min(struct(col("_line_idx").as("_i"), col("ts_us").as("_ts"))).as("_first"),
         min(when(col("_nxt") - col("_line_idx") - 1 >= eofBadRun,
           col("_line_idx") + eofBadRun)).as("_cut"))
       .head()

@@ -1,8 +1,12 @@
 package graft.can
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 
 /** Forward-fill (reference T5, `--forward-fill`): values persist across rows
   * until superseded. Real implementation only in the legacy driver
@@ -17,15 +21,16 @@ import org.apache.spark.sql.functions._
   *     through one partition: correct, concise, and a scale bottleneck.
   *     Kept for small outputs and as the differential-test oracle.
   *
-  *   - [[distributed]] — the 100 TB design. Two passes over a range-
-  *     partitioned sort:
+  *   - [[distributed]] — the 100 TB design. The input is evaluated once
+  *     into a hash shuffle, range-partitioned and sorted from there, then
+  *     two passes over that ONE sorted RDD:
   *       1. per-partition: last non-null value of each column (tiny summary,
   *          numPartitions × numCols, collected to the driver);
   *       2. prefix-combine the summaries (carry-in state per partition, an
   *          O(P × C) driver-side scan) and fill each partition locally with
   *          its broadcast carry-in.
-  *     No global shuffle beyond the range exchange; each row is touched
-  *     twice; parallelism = numPartitions throughout.
+  *     Two shuffles of the input and no cache; both passes read the range
+  *     shuffle's files; parallelism = numPartitions throughout.
   */
 object ForwardFill {
 
@@ -51,12 +56,23 @@ object ForwardFill {
 
   /** Scalable two-pass fill. Result is range-sorted by `orderCol`.
     *
-    * CONTRACT (the [[Bucketer.exactDistributed]] pattern): the returned
-    * DataFrame is persisted (MEMORY_AND_DISK) and already materialized —
-    * the caller owns the blocks and must `unpersist()` when done (or
-    * clearCache in a harness). The corpus-sized sorted intermediate is
-    * released before returning; lineage stays intact, so a lost result
-    * block recomputes through the (uncached) sort.
+    * Ties: rows with equal `orderCol` may land in either order within a
+    * partition, and a run of ties may straddle a partition edge, so where
+    * tied rows disagree on a fill column, which of their values is carried
+    * forward is unspecified (and may differ from [[windowed]]'s). Give it
+    * a unique order (add a tiebreak column upstream) for a deterministic
+    * fill.
+    *
+    * CONTRACT: the staging shuffle, the range shuffle and pass 1 run
+    * now, in one SQL execution; the returned DataFrame is lazy and
+    * persists nothing — its only job is the caller's action, which reads
+    * the range shuffle's files that pass 1 left. Observed metrics
+    * (`Dataset.observe`) in the input are delivered once, with that
+    * execution; the returned frame's plan hides its input behind an RDD,
+    * so its own action reports only what is observed on top of it.
+    * Partition boundaries are identical in both passes because they read
+    * one RDD instance, built over one range partitioner; a lost shuffle
+    * block recomputes through that same partitioner.
     */
   def distributed(df: DataFrame, orderCol: String, cols: Seq[String] = Nil,
       numPartitions: Int = 0): DataFrame = {
@@ -69,31 +85,37 @@ object ForwardFill {
         .getOrElse(spark.sparkContext.defaultParallelism)
     val fillCols = if (cols.nonEmpty) cols else df.columns.toSeq.filter(_ != orderCol)
     val schema = df.schema
+    val types = schema.fields.map(_.dataType)
     val fillIdx = fillCols.map(schema.fieldIndex).toArray
     val n = fillIdx.length
 
-    // persist (NOT localCheckpoint): the summary pass and the fill pass see
-    // identical partition boundaries because the range partitioner samples
-    // once at RDD construction and recomputed blocks reuse the same
-    // partitioner instance; localCheckpoint would truncate lineage and make
-    // any executor loss an unrecoverable failure at cluster scale. The
-    // cache is released in `finally` below after the result materializes —
-    // CacheManager pins persisted plans, so leaving it to the
-    // ContextCleaner (the pre-r19 comment's claim, refuted at Bucketer
-    // r18) leaked one full input copy per call in long-running sessions.
-    val sorted = df.repartitionByRange(parts, col(orderCol)).sortWithinPartitions(orderCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // The input is staged once in a hash shuffle on orderCol, inside one
+    // SQL execution that also runs pass 1, so listeners receive the
+    // input's observed metrics with it. Range-partitioning the input
+    // directly would evaluate it twice — the range partitioner's sampling
+    // job is a full pass of its child — and count any metric below twice.
+    val stagedQe = df.repartition(parts, col(orderCol)).queryExecution
 
-    // Pass 1: per-partition last non-null per fill column.
-    val summaries: Array[(Int, Array[Any])] = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val lasts = new Array[Any](n)
-      it.foreach { r =>
-        var j = 0
-        while (j < n) { val v = r.get(fillIdx(j)); if (v != null) lasts(j) = v; j += 1 }
-      }
-      Iterator.single((pid, lasts))
-    }.collect()
+    // Pass 1: per-partition last non-null per fill column, over the
+    // range-sorted RDD that pass 2 reads too. Values are copied out of the
+    // reused input row.
+    val (sorted, summaries) = SQLExecution.withNewExecutionId(stagedQe, Some("forwardFill")) {
+      val sorted = Shims.internalDataFrame(spark, stagedQe.toRdd, schema)
+        .repartitionByRange(parts, col(orderCol)).sortWithinPartitions(orderCol)
+        .queryExecution.toRdd
+      (sorted, sorted.mapPartitionsWithIndex { (pid, it) =>
+        val lasts = new Array[Any](n)
+        it.foreach { r =>
+          var j = 0
+          while (j < n) {
+            val k = fillIdx(j)
+            if (!r.isNullAt(k)) lasts(j) = InternalRow.copyValue(r.get(k, types(k)))
+            j += 1
+          }
+        }
+        Iterator.single((pid, lasts))
+      }.collect())
+    }
 
     // Prefix-combine: carry-in for partition p = merged lasts of 0..p-1.
     val byPid = summaries.sortBy(_._1)
@@ -106,27 +128,25 @@ object ForwardFill {
     }
     val bc = spark.sparkContext.broadcast(carryIn)
 
-    // Pass 2: local fill with broadcast carry-in.
-    val filled = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    // Pass 2: local fill with broadcast carry-in, Catalyst rows in and out.
+    val filled = sorted.mapPartitionsWithIndex { (pid, it) =>
       val state = bc.value(pid).clone()
       it.map { r =>
-        val vals = new Array[Any](r.length)
+        val vals = new Array[Any](types.length)
         var i = 0
-        while (i < r.length) { vals(i) = r.get(i); i += 1 }
+        while (i < vals.length) {
+          if (!r.isNullAt(i)) vals(i) = InternalRow.copyValue(r.get(i, types(i)))
+          i += 1
+        }
         var j = 0
         while (j < n) {
-          val v = vals(fillIdx(j))
-          if (v != null) state(j) = v else vals(fillIdx(j)) = state(j)
+          val k = fillIdx(j)
+          if (vals(k) != null) state(j) = vals(k) else vals(k) = state(j)
           j += 1
         }
-        Row.fromSeq(vals.toIndexedSeq)
+        new GenericInternalRow(vals): InternalRow
       }
     }
-    val result = spark.createDataFrame(filled, schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try result.count() // materialize while `sorted` is still cached
-    catch { case e: Throwable => result.unpersist(); throw e }
-    result
-    } finally { sorted.unpersist(); () }
+    Shims.internalDataFrame(spark, filled, schema)
   }
 }

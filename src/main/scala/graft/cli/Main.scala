@@ -248,7 +248,8 @@ object Main {
       }
       // keyless-exact decodeLog results arrive persisted (caller-owned
       // blocks — see Bucketer.exactDistributed's contract); release them
-      // once written. A no-op for the unpersisted paths.
+      // once written. Every other path, forward fill included, is lazy and
+      // this is a no-op.
       wide.unpersist()
       ()
     }

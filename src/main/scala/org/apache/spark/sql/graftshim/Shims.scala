@@ -25,4 +25,13 @@ object Shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** DataFrame over an RDD of Catalyst rows — no external-row conversion
+    * on the way in.
+    */
+  def internalDataFrame(spark: org.apache.spark.sql.SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, schema)
 }

@@ -63,6 +63,43 @@ class PipelineMetricsSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(progress)
   }
 
+  test("T7 forward fill, tumbling, per-frame and exact: one write reports " +
+      "every packet and row exactly once") {
+    // the fill runs its summary job at decodeLog time and leaves a lazy
+    // frame, so the frames counter and the rows counter arrive with
+    // different jobs; each must still be counted once
+    val progress = new PipelineMetrics.Progress(quiet = true, sessionHint = Some(spark))
+    spark.listenerManager.register(progress)
+    val out = java.nio.file.Files.createTempDirectory("graft_t7_ffill").toString
+    try {
+      // (observed packets, exact-path packets, rows, rows written) per run
+      def run(name: String, cfg: CanPipelineConfig): (Long, Long, Long, Long) = {
+        val (m0, r0) = (progress.messages.get(), progress.rows.get())
+        val wide = CanPipeline.decodeLog(spark, "fixtures/mini.dbc", "fixtures/mini.log", cfg)
+        wide.write.parquet(s"$out/$name")
+        wide.unpersist()
+        val written = spark.read.parquet(s"$out/$name").count()
+        eventually() { progress.rows.get() - r0 == written }
+        Thread.sleep(500) // a late duplicate delivery would land here
+        (progress.messages.get() - m0, progress.packets - progress.messages.get(),
+          progress.rows.get() - r0, written)
+      }
+      // tumbling: the 7 parsed frames are observed once, rows = 3 buckets
+      val (observed, _, rows, written) = run("tumble", CanPipelineConfig(
+        cacheMs = 10.0, forwardFill = true, observeMetrics = true))
+      assert((observed, rows, written) == ((7L, 3L, 3L)))
+      // per-frame fill: the fill's input is the observed frames plan
+      // itself, evaluated once although it is range-partitioned
+      val (perFrame, _, frameRows, frameWritten) = run("perframe",
+        CanPipelineConfig(forwardFill = true, observeMetrics = true))
+      assert((perFrame, frameRows, frameWritten) == ((7L, 6L, 6L)))
+      // exact keyless counts decoded frames (the 6 known-id ones) through
+      // its own accumulator — PipelineMetrics.newExactFramesCounter
+      assert(run("exact", CanPipelineConfig(cacheMs = 10.0, exact = true,
+        forwardFill = true, observeMetrics = true)) == ((0L, 6L, 3L, 3L)))
+    } finally spark.listenerManager.unregister(progress)
+  }
+
   test("T7 streaming: StreamingProgress accumulates per-micro-batch counts") {
     val net = DbcParser.parseFile("fixtures/mini.dbc")
     val progress = new PipelineMetrics.StreamingProgress(quiet = true)

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import graft.can.{CandumpParser, ForwardFill}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 
 /** Plan-shape regression suite: the physical-plan properties the 100 TB
@@ -542,5 +543,74 @@ class PlanSpec extends AnyFunSuite {
         s"as-of resample must be join-free (union+window):\n$p")
       assert(p.contains("Window"), s"expected the keyed as-of windows:\n$p")
     }
+  }
+
+  // ---- CAN --file path: scan splits, one parse per line, cache-free fill --
+
+  /** A candump log of `n` lines (~35 B each) in a fresh temp directory. */
+  private def canLog(n: Int): String = {
+    val f = java.nio.file.Files.createTempDirectory("graft_plan_log").resolve("a.log")
+    val w = java.nio.file.Files.newBufferedWriter(f)
+    try (0 until n).foreach { i =>
+      w.write(f"(1700000000.${i % 1000000}%06d) can0 ${100 + i % 5}%X#${i & 0xFFFF}%04X\n")
+    } finally w.close()
+    f.toString
+  }
+
+  test("readLog: a log under 16 MB is scanned in at least defaultParallelism " +
+      "splits") {
+    val log = canLog(60000) // ~2 MB: one file-source split at the 4 MB open cost
+    assert(new java.io.File(log).length < 16L * 1024 * 1024)
+    val parts = CandumpParser.readLog(spark, log).rdd.getNumPartitions
+    assert(parts >= spark.sparkContext.defaultParallelism,
+      s"$parts scan partitions for ${spark.sparkContext.defaultParallelism} cores")
+  }
+
+  test("readLog: no regex in the optimized plan, one candump_line per line " +
+      "per branch") {
+    val p = CandumpParser.readLog(spark, "fixtures/mini.log")
+      .queryExecution.optimizedPlan.toString
+    assert(!p.contains("regexp_extract") && !p.contains("RLIKE"), s"regex left:\n$p")
+    // two branches (the frames and the t0 aggregate), each one scan and
+    // one parse: a filter pushed below the parse would add a second
+    val scans = "LogicalRDD".r.findAllMatchIn(p).size
+    val parses = "candump_line\\(".r.findAllMatchIn(p).size
+    assert(scans == 2 && parses == 2, s"$parses parses over $scans scans:\n$p")
+  }
+
+  test("ForwardFill.distributed leaves no cached relation or persisted RDD") {
+    val df = (0 until 200).map(i => (i.toDouble,
+      if (i % 7 == 0) Int.box(i) else null.asInstanceOf[java.lang.Integer]))
+      .toDF("ts", "x")
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    val filled = ForwardFill.distributed(df, "ts", numPartitions = 3)
+    assert(filled.count() == 200)
+    val p = filled.queryExecution.optimizedPlan.toString
+    assert(!p.contains("InMemoryRelation"), s"cached relation in the result:\n$p")
+    assert(spark.sparkContext.getPersistentRDDs.size == rdds)
+  }
+
+  test("ForwardFill.distributed equals windowed for 1..8 partitions, nulls " +
+      "straddling partition edges") {
+    // unique order; values only every 37th/53rd row, so null runs cross
+    // every range boundary at each partition count, and the leading rows
+    // stay null until the first value
+    val df = (0 until 300).map { i =>
+      (i * 3L + 1, if (i % 37 == 5) Int.box(i) else null.asInstanceOf[java.lang.Integer],
+        if (i % 53 == 40) Double.box(i / 2.0) else null.asInstanceOf[java.lang.Double])
+    }.toDF("t", "a", "b").repartition(5)
+    val want = ForwardFill.windowed(df, "t").orderBy("t").collect().toSeq
+    (1 to 8).foreach { n =>
+      val got = ForwardFill.distributed(df, "t", numPartitions = n)
+        .orderBy("t").collect().toSeq
+      assert(got == want, s"numPartitions = $n")
+    }
+  }
+
+  test("ForwardFill scaladoc states the tie semantics of orderCol") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/can/ForwardFill.scala")), "UTF-8")
+    assert(src.contains("Ties: rows with equal `orderCol`"),
+      "distributed()'s scaladoc must say what happens when orderCol has ties")
   }
 }
