@@ -1,8 +1,12 @@
 package graft.can
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
+import graft.plans.RangeScan
 
 /** Time-bucketing of the wide per-frame table (reference T1-T4,
   * `/root/reference/src/main.cpp:122-150`, SURVEY §2.4).
@@ -353,8 +357,8 @@ object Bucketer {
     * such gaps therefore form an independent segment, and the global
     * sequential fold equals per-segment folds run in parallel.
     *
-    * Implementation (two passes over a range-partitioned sort, same shape
-    * as [[ForwardFill.distributed]]):
+    * Implementation (two passes of the shared [[graft.plans.RangeScan]]
+    * on `ts_ms`):
     *   1. per partition: first/last ts + count of internal resync gaps;
     *   2. driver: prefix-combine partition summaries (adding boundary gaps
     *      between consecutive partitions) into per-partition segment-id
@@ -366,48 +370,34 @@ object Bucketer {
     * segment (the honest sequential case); real telemetry at ms-scale
     * windows has gaps everywhere, giving near-linear parallelism.
     *
-    * `forwardFill = true` applies [[ForwardFill.distributed]] to the fold
-    * before the result is persisted — equivalent to the fold's in-pass
-    * carry, because observed values always win over carried ones under
-    * either combine policy — so the filled rows are what the caller owns.
+    * CONTRACT ([[graft.plans.RangeScan]]'s): the input is staged and
+    * pass 1 runs now; the returned DataFrame is lazy and persists nothing.
+    *
+    * `frameCounter` gets the input's row count from pass 1's collected
+    * summaries, added once. It is kept only for the benchmark's traced
+    * exact job, which still passes one; the pipeline counts frames with
+    * an observed metric (see [[PipelineMetrics.newExactFramesCounter]]).
     */
-  def exactDistributed(wide: org.apache.spark.sql.DataFrame, cacheMs: Double,
+  def exactDistributed(wide: DataFrame, cacheMs: Double,
       policy: CombinePolicy = CombinePolicy.LastWins,
       numPartitions: Int = 0,
-      frameCounter: Option[org.apache.spark.util.LongAccumulator] = None,
-      forwardFill: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
+      frameCounter: Option[org.apache.spark.util.LongAccumulator] = None)
+      : DataFrame = {
     require(cacheMs > 0,
       s"cacheMs must be positive, got $cacheMs (cacheMs <= 0 means " +
         "one row per frame — route through Bucketer.bucket, which " +
         "dispatches that case to BucketMode.PerFrame)")
     val spark = wide.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val tsIdx = wide.schema.fieldIndex("ts_ms")
-    // persist (NOT localCheckpoint): both passes must see identical
-    // partition boundaries — guaranteed because the range partitioner
-    // samples once at RDD construction and lost blocks recompute through
-    // the SAME partitioner instance; localCheckpoint would truncate
-    // lineage and turn any executor loss into an unrecoverable job
-    // failure at the 1000-executor design point. Released in `finally`
-    // below after the result materializes — CacheManager holds a strong
-    // reference to persisted plans, so the ContextCleaner would NEVER
-    // release these blocks on its own (a long-running session calling
-    // this per input file would pin one full sorted input copy per call
-    // until eviction). The RESULT (one row per bucket — output-sized)
-    // comes back persisted+materialized instead: the caller owns those
-    // blocks (unpersist when done; harnesses clearCache between queries).
-    val sorted = wide.repartitionByRange(parts, col("ts_ms"))
-      .sortWithinPartitions("ts_ms")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // Pass 1: per-partition (firstTs, lastTs, internalGapCount); empty → null.
-    // The gap test MUST be the fold's own close test with the worst-case
-    // bucket start (s = previous ts): `ts > last + cacheMs`, computed with
-    // the identical floating-point expression — `ts - last > cacheMs`
-    // rounds differently and could split a bucket the fold keeps open.
-    val summaries = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    // Pass 1: per-partition (firstTs, lastTs, internalGapCount, rows);
+    // empty → NaN. The gap test MUST be the fold's own close test with the
+    // worst-case bucket start (s = previous ts): `ts > last + cacheMs`,
+    // computed with the identical floating-point expression — `ts - last
+    // > cacheMs` rounds differently and could split a bucket the fold
+    // keeps open.
+    val (sorted, summaries) = RangeScan(wide, Seq(col("ts_ms")), numPartitions,
+        "exactDistributed") { it =>
       var first = Double.NaN; var last = Double.NaN; var gaps = 0L; var n = 0L
       it.foreach { r =>
         val ts = r.getDouble(tsIdx)
@@ -416,21 +406,15 @@ object Bucketer {
         last = ts
         n += 1
       }
-      Iterator.single((pid, first, last, gaps, n))
-    }.collect().sortBy(_._1)
-    // T7 on the exact path: frame count rides the collected summaries and
-    // is added to the accumulator ONCE, driver-side — an add inside the
-    // mapPartitions closure would be a transformation-side accumulator
-    // update, which task retries / speculative duplicates can re-apply
-    // (RDD actions bypass Dataset.observe entirely — see
-    // PipelineMetrics.newExactFramesCounter)
-    frameCounter.foreach(_.add(summaries.map(_._5).sum))
+      (first, last, gaps, n)
+    }
+    frameCounter.foreach(_.add(summaries.map(_._4).sum))
 
     // Driver prefix: segment-id offset at the start of each partition
     val offsets = new Array[Long](summaries.length)
     var segBase = 0L
     var prevLast = Double.NaN
-    summaries.foreach { case (pid, first, last, gaps, _) =>
+    summaries.zipWithIndex.foreach { case ((first, last, gaps, _), pid) =>
       if (!first.isNaN && !prevLast.isNaN && first > prevLast + cacheMs) segBase += 1
       offsets(pid) = segBase
       if (!first.isNaN) { segBase += gaps; prevLast = last }
@@ -438,30 +422,20 @@ object Bucketer {
     val bc = spark.sparkContext.broadcast(offsets)
 
     // Pass 2: assign global segment ids
-    val segField = org.apache.spark.sql.types.StructField("_seg", org.apache.spark.sql.types.LongType, nullable = false)
-    val withSegSchema = org.apache.spark.sql.types.StructType(wide.schema.fields :+ segField)
-    val withSeg = spark.createDataFrame(
-      sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val withSeg = Shims.internalDataFrame(spark,
+      sorted.mapPartitionsWithIndex { (pid, it) =>
         var seg = bc.value(pid)
         var last = Double.NaN
         it.map { r =>
           val ts = r.getDouble(tsIdx)
           if (!last.isNaN && ts > last + cacheMs) seg += 1
           last = ts
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ seg)
+          new JoinedRow(r, InternalRow(seg)): InternalRow
         }
-      }, withSegSchema)
-
-    try {
-      val folded = exactFold(withSeg, cacheMs, Seq("_seg"), policy,
-          forwardFill = false)
-        .drop("_seg")
-      val result = (if (forwardFill) ForwardFill.distributed(folded, TimeCol) else folded)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try result.count() // materialize while `sorted` is still cached
-      catch { case e: Throwable => result.unpersist(); throw e }
-      result
-    } finally { sorted.unpersist(); () }
+      },
+      wide.schema.add(StructField("_seg", LongType, nullable = false)))
+    exactFold(withSeg, cacheMs, Seq("_seg"), policy, forwardFill = false)
+      .drop("_seg")
   }
 
   /** Exact data-driven bucketing as a sorted fold (T1b) over the

@@ -15,15 +15,6 @@ import graft.dbc._
   * last-wins combine and real forward-fill (legacy-main semantics), intended
   * typing, working flt32 decode.
   */
-/** `frameLevelTumbling`: `None` (default) auto-selects the frame-level
-  * tumbling path ([[Bucketer.tumblingFromFrames]]) when the network is
-  * wider than [[Bucketer.CodegenArgWidthLimit]] signals — logged, because
-  * the paths differ in duplicate-timestamp tie-breaking (frame-level
-  * breaks equal-ts ties by raw payload u64, the wide paths per signal by
-  * decoded value; identical on tie-free streams). `Some(true|false)`
-  * forces the choice so width alone never silently changes tie semantics
-  * for callers who care.
-  */
 final case class CanPipelineConfig(
     cacheMs: Double = 0.0,
     exact: Boolean = false,
@@ -33,20 +24,12 @@ final case class CanPipelineConfig(
     typing: TypingMode = TypingMode.Intended,
     combine: CombinePolicy = CombinePolicy.LastWins,
     observeMetrics: Boolean = false,
-    frameLevelTumbling: Option[Boolean] = None,
     lenientDbc: Boolean = false)
 
 object CanPipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** OWNERSHIP NOTE: `exact = true` with no `exactKeys` (the keyless
-    * distributed-exact path, [[Bucketer.exactDistributed]]'s contract)
-    * returns a persisted + materialized frame rather than a lazy plan,
-    * because that fold must release its corpus-sized sorted-input cache
-    * before returning. Long-running sessions should `result.unpersist()`
-    * once done consuming it; everywhere else the call is a no-op.
-    */
   def decodeLog(spark: SparkSession, dbcPath: String, logPath: String,
       cfg: CanPipelineConfig = CanPipelineConfig()): DataFrame = {
     val net = DbcParser.parseFile(dbcPath, cfg.lenientDbc)
@@ -85,45 +68,21 @@ object CanPipeline {
 
   /** frames(ts_ms, can_id, data) → bucketed wide table. */
   def fromFrames(net: Network, frames0: DataFrame, cfg: CanPipelineConfig): DataFrame = {
-    // Frame counter only on single-pass plans: the exact path range-
-    // partitions its input, and RangePartitioner's sampling pass evaluates
-    // the child a second time — a flow-through CollectMetrics there would
-    // double-count. Exact mode still reports the rows counter (its fold
-    // input is checkpoint-materialized, one pass).
-    val exactMode = cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.isEmpty
-    val frames =
-      if (exactMode) frames0
-      else withMetrics(frames0, cfg, PipelineMetrics.observeFrames)
+    val frames = withMetrics(frames0, cfg, PipelineMetrics.observeFrames)
     val wide = SignalDecoder.wideFrame(net, frames, cfg.typing,
       carryCols = cfg.exactKeys)
-    val result = if (cfg.exact && cfg.cacheMs > 0) {
-      if (cfg.exactKeys.nonEmpty)
-        // keyed: independent folds per key, forward-fill in-pass
-        Bucketer.exactFold(wide, cfg.cacheMs, cfg.exactKeys, cfg.combine, cfg.forwardFill)
-      else {
-        // keyless: gap-segmented distributed exact fold, filled inside
-        // it before its result is persisted.
-        // T7: frames counted in its pass 1 via accumulator — the observe
-        // node was skipped above (sampling-pass double count), and RDD
-        // actions would never deliver it anyway
-        val counter =
-          if (cfg.observeMetrics)
-            Some(PipelineMetrics.newExactFramesCounter(frames0.sparkSession))
-          else None
-        Bucketer.exactDistributed(wide, cfg.cacheMs, cfg.combine,
-          frameCounter = counter, forwardFill = cfg.forwardFill)
-      }
-    } else {
-      val frameLevel = cfg.cacheMs > 0 && cfg.frameLevelTumbling.getOrElse(
-        net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit)
-      if (frameLevel && cfg.frameLevelTumbling.isEmpty)
-        // the auto-switch is visible, not silent: the frame-level path has
-        // different (still deterministic) duplicate-ts tie semantics — see
-        // CanPipelineConfig.frameLevelTumbling
+    val result = if (cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.nonEmpty)
+      // keyed: independent folds per key, forward-fill in-pass
+      Bucketer.exactFold(wide, cfg.cacheMs, cfg.exactKeys, cfg.combine, cfg.forwardFill)
+    else {
+      // the frame-level tumbling path has different (still deterministic)
+      // duplicate-ts tie semantics, so the width switch is logged
+      val frameLevel = !cfg.exact && cfg.cacheMs > 0 &&
+        net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit
+      if (frameLevel)
         log.info(s"network has ${net.signalsInOrder.size} signals " +
           s"(> ${Bucketer.CodegenArgWidthLimit}): selecting frame-level " +
-          "tumbling (payload-u64 tie-break on duplicate timestamps; " +
-          "force with frameLevelTumbling=Some(false))")
+          "tumbling (payload-u64 tie-break on duplicate timestamps)")
       val bucketed =
         if (frameLevel)
           // fleet-width tumbling: aggregate the raw frame payload (4
@@ -133,7 +92,9 @@ object CanPipeline {
           Bucketer.tumblingFromFrames(net, frames, cfg.cacheMs, cfg.combine,
             cfg.typing)
         else Bucketer.bucket(wide,
-          if (cfg.cacheMs > 0) BucketMode.Tumbling(cfg.cacheMs) else BucketMode.PerFrame,
+          if (cfg.cacheMs <= 0) BucketMode.PerFrame
+          else if (cfg.exact) BucketMode.Exact(cfg.cacheMs) // keyless: exactDistributed
+          else BucketMode.Tumbling(cfg.cacheMs),
           cfg.combine)
       if (cfg.forwardFill)
         ForwardFill.distributed(bucketed, DbcColumns.TimeCol)

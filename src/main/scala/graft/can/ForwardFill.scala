@@ -3,10 +3,10 @@ package graft.can
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
+import graft.plans.RangeScan
 
 /** Forward-fill (reference T5, `--forward-fill`): values persist across rows
   * until superseded. Real implementation only in the legacy driver
@@ -21,16 +21,15 @@ import org.apache.spark.sql.graftshim.Shims
   *     through one partition: correct, concise, and a scale bottleneck.
   *     Kept for small outputs and as the differential-test oracle.
   *
-  *   - [[distributed]] — the 100 TB design. The input is evaluated once
-  *     into a hash shuffle, range-partitioned and sorted from there, then
-  *     two passes over that ONE sorted RDD:
+  *   - [[distributed]] — the 100 TB design, on the shared two-pass
+  *     [[graft.plans.RangeScan]]:
   *       1. per-partition: last non-null value of each column (tiny summary,
   *          numPartitions × numCols, collected to the driver);
   *       2. prefix-combine the summaries (carry-in state per partition, an
   *          O(P × C) driver-side scan) and fill each partition locally with
   *          its broadcast carry-in.
-  *     Two shuffles of the input and no cache; both passes read the range
-  *     shuffle's files; parallelism = numPartitions throughout.
+  *     Two shuffles of the input and no cache; parallelism = numPartitions
+  *     throughout.
   */
 object ForwardFill {
 
@@ -63,68 +62,45 @@ object ForwardFill {
     * a unique order (add a tiebreak column upstream) for a deterministic
     * fill.
     *
-    * CONTRACT: the staging shuffle, the range shuffle and pass 1 run
-    * now, in one SQL execution; the returned DataFrame is lazy and
-    * persists nothing — its only job is the caller's action, which reads
-    * the range shuffle's files that pass 1 left. Observed metrics
-    * (`Dataset.observe`) in the input are delivered once, with that
-    * execution; the returned frame's plan hides its input behind an RDD,
-    * so its own action reports only what is observed on top of it.
-    * Partition boundaries are identical in both passes because they read
-    * one RDD instance, built over one range partitioner; a lost shuffle
-    * block recomputes through that same partitioner.
+    * CONTRACT ([[graft.plans.RangeScan]]'s): the staging shuffle, the
+    * range shuffle and pass 1 run now, in one SQL execution; the returned
+    * DataFrame is lazy and persists nothing — its only job is the
+    * caller's action, which reads the range shuffle's files that pass 1
+    * left. Observed metrics in the input are delivered once, with that
+    * execution.
     */
   def distributed(df: DataFrame, orderCol: String, cols: Seq[String] = Nil,
       numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    // toIntOption: "spark.sql.shuffle.partitions" may legitimately be
-    // non-numeric ("auto" under some AQE distributions) — fall back to
-    // cluster parallelism instead of throwing (the prefixCore rule)
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toIntOption
-        .getOrElse(spark.sparkContext.defaultParallelism)
     val fillCols = if (cols.nonEmpty) cols else df.columns.toSeq.filter(_ != orderCol)
     val schema = df.schema
     val types = schema.fields.map(_.dataType)
     val fillIdx = fillCols.map(schema.fieldIndex).toArray
     val n = fillIdx.length
 
-    // The input is staged once in a hash shuffle on orderCol, inside one
-    // SQL execution that also runs pass 1, so listeners receive the
-    // input's observed metrics with it. Range-partitioning the input
-    // directly would evaluate it twice — the range partitioner's sampling
-    // job is a full pass of its child — and count any metric below twice.
-    val stagedQe = df.repartition(parts, col(orderCol)).queryExecution
-
-    // Pass 1: per-partition last non-null per fill column, over the
-    // range-sorted RDD that pass 2 reads too. Values are copied out of the
-    // reused input row.
-    val (sorted, summaries) = SQLExecution.withNewExecutionId(stagedQe, Some("forwardFill")) {
-      val sorted = Shims.internalDataFrame(spark, stagedQe.toRdd, schema)
-        .repartitionByRange(parts, col(orderCol)).sortWithinPartitions(orderCol)
-        .queryExecution.toRdd
-      (sorted, sorted.mapPartitionsWithIndex { (pid, it) =>
-        val lasts = new Array[Any](n)
-        it.foreach { r =>
-          var j = 0
-          while (j < n) {
-            val k = fillIdx(j)
-            if (!r.isNullAt(k)) lasts(j) = InternalRow.copyValue(r.get(k, types(k)))
-            j += 1
-          }
+    // Pass 1: per-partition last non-null per fill column. Values are
+    // copied out of the reused input row.
+    val (sorted, lasts) = RangeScan(df, Seq(col(orderCol)), numPartitions,
+        "forwardFill") { it =>
+      val lasts = new Array[Any](n)
+      it.foreach { r =>
+        var j = 0
+        while (j < n) {
+          val k = fillIdx(j)
+          if (!r.isNullAt(k)) lasts(j) = InternalRow.copyValue(r.get(k, types(k)))
+          j += 1
         }
-        Iterator.single((pid, lasts))
-      }.collect())
+      }
+      lasts
     }
 
     // Prefix-combine: carry-in for partition p = merged lasts of 0..p-1.
-    val byPid = summaries.sortBy(_._1)
-    val carryIn = new Array[Array[Any]](byPid.length)
+    val carryIn = new Array[Array[Any]](lasts.length)
     val acc = new Array[Any](n)
-    byPid.foreach { case (pid, lasts) =>
+    lasts.indices.foreach { pid =>
       carryIn(pid) = acc.clone()
       var j = 0
-      while (j < n) { if (lasts(j) != null) acc(j) = lasts(j); j += 1 }
+      while (j < n) { if (lasts(pid)(j) != null) acc(j) = lasts(pid)(j); j += 1 }
     }
     val bc = spark.sparkContext.broadcast(carryIn)
 

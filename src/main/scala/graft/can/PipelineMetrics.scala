@@ -26,23 +26,14 @@ object PipelineMetrics {
   val FramesMetric = "graft_frames"
   val RowsMetric = "graft_rows"
 
-  /** Frame counter for the exact keyless path: `exactDistributed`'s
-    * segment passes are RDD actions, which carry no `QueryExecution` — a
-    * `Dataset.observe` node upstream would (a) never deliver to the
-    * listener and (b) be double-counted by the range partitioner's
-    * sampling pass. Instead its pass 1 (a single `collect` action over the
-    * persisted sorted input — accumulator updates inside actions are
-    * exactly-once per partition) counts rows into this accumulator, and
-    * [[Progress]] folds it into the printed line.
-    *
-    * Semantics note: this counts DECODED (known-id) frames — the
-    * decoder's `msg_count` (`/root/reference/src/decoder.cpp:125`) —
-    * where the observed-metric path counts parsed packets (main's
-    * `messages`); the pre-filter stream is not observable exactly-once on
-    * this path. One registered counter per SESSION (weak-keyed, so a
-    * dropped session frees it); a new exact run in the same session
-    * replaces it — the progress line reflects the most recent exact
-    * pipeline plus any observed totals, and never another session's count.
+  /** Frame counter kept only for the benchmark's traced exact job
+    * (`perfbench/src/perfbench/CanBatch.scala`), which passes one to
+    * [[Bucketer.exactDistributed]]'s `frameCounter`: that pass 1 adds the
+    * decoded (known-id) frame count once, from its collected summaries, and
+    * [[Progress.packets]] folds it in. The pipeline itself observes
+    * parsed frames with [[observeFrames]] on every path. One registered
+    * counter per SESSION (weak-keyed, so a dropped session frees it); a
+    * new one in the same session replaces it.
     */
   private val exactFramesAccs = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
@@ -73,11 +64,9 @@ object PipelineMetrics {
   /** Batch listener: accumulates totals and prints the reference-style
     * progress line after each action touching the observed plans.
     *
-    * `sessionHint` scopes the exact-path accumulator lookup from
-    * construction onwards (the CLI passes its session). Without it the
-    * scope is learned from the first listener callback — correct, but
-    * [[Progress.packets]] reads 0 until then even if an exact pipeline
-    * has already filled its accumulator.
+    * `sessionHint` scopes the [[newExactFramesCounter]] lookup from
+    * construction onwards; without it the scope is learned from the first
+    * listener callback. Kept only for the benchmark, which passes it.
     */
   final class Progress(quiet: Boolean = false,
       sessionHint: Option[org.apache.spark.sql.SparkSession] = None)
@@ -85,25 +74,20 @@ object PipelineMetrics {
     val messages = new AtomicLong(0)
     val rows = new AtomicLong(0)
 
-    /** True once a frames counter has been observed. The exact-keyless
-      * pipeline deliberately omits the observe node (its range-partitioning
-      * sampling pass would double-count a flow-through CollectMetrics —
-      * `CanPipeline.fromFrames`) and counts through
-      * [[PipelineMetrics.newExactFramesCounter]] instead, so the progress
-      * line only claims a packet count when one was actually measured.
-      * Volatile: listener callbacks may arrive on a different listener-bus
-      * thread than the reader.
+    /** True once a frames counter has been observed, so the progress
+      * line only claims a packet count when one was actually measured (a
+      * plan may observe rows only). Volatile: listener callbacks may
+      * arrive on a different listener-bus thread than the reader.
       */
     @volatile private var sawFrames = false
 
-    /** The session scoping the exact-path accumulator lookup: the
+    /** The session scoping the [[newExactFramesCounter]] lookup: the
       * construction hint, else learned from the first callback.
       */
     @volatile private var session: Option[org.apache.spark.sql.SparkSession] = sessionHint
 
     /** Total packet count: observed-metric totals plus this session's
-      * exact-path accumulator (see
-      * [[PipelineMetrics.newExactFramesCounter]]).
+      * [[PipelineMetrics.newExactFramesCounter]], if any.
       */
     def packets: Long = messages.get() +
       session.map(PipelineMetrics.exactFramesValue).getOrElse(0L)

@@ -246,24 +246,19 @@ object Main {
           if (wsTarget.isDefined) wsPush(run)
         }
       }
-      // keyless-exact decodeLog results arrive persisted (caller-owned
-      // blocks — see Bucketer.exactDistributed's contract); release them
-      // once written. Every other path, forward fill included, is lazy and
-      // this is a no-op.
-      wide.unpersist()
       ()
     }
 
     mode match {
       case "file" =>
-        spark.listenerManager.register(new PipelineMetrics.Progress(sessionHint = Some(spark))) // T7
+        spark.listenerManager.register(new PipelineMetrics.Progress()) // T7
         val cfg = CanPipelineConfig(cacheMs = cacheMs, exact = exact,
           exactKeys = bucketKey.toSeq,
           forwardFill = ffill, adjustTimestamp = adjust, observeMetrics = true,
           lenientDbc = lenientDbc)
         writeBatch(CanPipeline.decodeLog(spark, dbc, in, cfg))
       case "stdin" => // S3: `cat log | graft.cli.Main <dbc> --stdin`
-        spark.listenerManager.register(new PipelineMetrics.Progress(sessionHint = Some(spark))) // T7
+        spark.listenerManager.register(new PipelineMetrics.Progress()) // T7
         val cfg = CanPipelineConfig(cacheMs = cacheMs, exact = exact,
           exactKeys = bucketKey.toSeq,
           forwardFill = ffill, adjustTimestamp = adjust, observeMetrics = true,

@@ -56,7 +56,7 @@ object Bpe {
     var w = words.persist(lvl)
     // on any failure the caller never receives the handle it is
     // contractually required to unpersist — release the current round's
-    // caches before propagating (the CorpusSelect.prefixCore contract)
+    // caches before propagating
     var ok = false
     try {
       w.count()

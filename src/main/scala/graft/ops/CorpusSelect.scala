@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.{ArrayType, LongType}
+import graft.plans.RangeScan
 
 /** Token-budget corpus selection: keep the maximal prefix of a totally-
   * ordered corpus whose running weight sum stays within `budget` — the
@@ -10,8 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   *
   * The naive form is a GLOBAL ordered window (`sum(w) OVER (ORDER BY ...)`),
   * which funnels the whole corpus through one partition. This is the 100 TB
-  * design instead — the same two-pass prefix-combine as
-  * [[graft.can.ForwardFill.distributed]]:
+  * design instead — the shared two-pass [[graft.plans.RangeScan]]:
   *
   *   1. range-partition on the selection order; per-partition weight
   *      subtotals (ONE row per partition) are collected to the driver;
@@ -30,12 +33,11 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * defined purely by the total order, which callers must make total
   * (e.g. `(quality DESC, doc_id)`).
   *
-  * CONTRACT (same as [[Dedup.minhashNearDups]]): the returned DataFrame
-  * is persisted (MEMORY_AND_DISK) and already materialized — the caller
-  * owns the blocks and must `unpersist()` when done (or clearCache in a
-  * harness). The corpus-sized sorted intermediate is released before
-  * returning; lineage stays intact, so a lost result block recomputes
-  * through the (uncached) sort.
+  * CONTRACT ([[graft.plans.RangeScan]]'s, for every prefix entry point
+  * here): the input is staged and pass 1 runs at call time, in one SQL
+  * execution; the returned DataFrame is lazy and persists nothing. Each
+  * action on it runs pass 2 over the range shuffle's files, so there is
+  * nothing for the caller to release.
   */
 object CorpusSelect {
 
@@ -248,18 +250,13 @@ object CorpusSelect {
     * `groupCol` must be a string column (languages, sources — the
     * grouped-budget use cases); weights are non-negative longs, like
     * [[budgetPrefix]]. Result carries every input column plus `cumCol`
-    * (the inclusive within-group running sum).
-    *
-    * CONTRACT (same as [[budgetPrefix]]): the result is persisted and
-    * materialized; the caller owns the blocks.
+    * (the inclusive within-group running sum). Lazy, per the object
+    * CONTRACT.
     */
   def groupedBudgetPrefix(df: DataFrame, groupCol: String,
       weightCol: String, budgetPerGroup: Long, order: Seq[Column],
       cumCol: String = "cum_weight", numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toIntOption
-        .getOrElse(spark.sparkContext.defaultParallelism)
     require(df.schema(weightCol).dataType == LongType,
       s"$weightCol must be LongType (exact token counts); cast upstream")
     require(df.schema(groupCol).dataType ==
@@ -269,76 +266,67 @@ object CorpusSelect {
       s"output column '$cumCol' already exists in the input")
     val gIdx = df.schema.fieldIndex(groupCol)
     val wIdx = df.schema.fieldIndex(weightCol)
+    def group(r: InternalRow): String =
+      if (r.isNullAt(gIdx)) null else r.getUTF8String(gIdx).toString
 
-    val sorted = df.repartitionByRange(parts, F.col(groupCol) +: order: _*)
-      .sortWithinPartitions(F.col(groupCol) +: order: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Pass 1: per-(partition, group) subtotals. LinkedHashMap keeps
-      // group-arrival order, but correctness only needs the sums.
-      val subtotals: Array[(Int, String, Long)] =
-        sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          it.foreach { r =>
-            val w = r.getLong(wIdx)
-            require(w >= 0, s"negative weight $w breaks prefix monotonicity")
-            val g = r.getString(gIdx)
-            m.update(g, m.getOrElse(g, 0L) + w)
-          }
-          m.iterator.map { case (g, s) => (pid, g, s) }.toList.iterator
-        }.collect()
+    // Pass 1: per-(partition, group) subtotals. LinkedHashMap keeps
+    // group-arrival order, but correctness only needs the sums.
+    val (sorted, subtotals) = RangeScan(df, F.col(groupCol) +: order,
+        numPartitions, "groupedBudgetPrefix") { it =>
+      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      it.foreach { r =>
+        val w = r.getLong(wIdx)
+        require(w >= 0, s"negative weight $w breaks prefix monotonicity")
+        val g = group(r)
+        m.update(g, m.getOrElse(g, 0L) + w)
+      }
+      m.toList
+    }
 
-      // Prefix-combine per group across partitions (partitions ascend).
-      val acc = scala.collection.mutable.Map.empty[String, Long]
-      val offsets: Map[(Int, String), Long] =
-        subtotals.sortBy(_._1).map { case (pid, g, s) =>
+    // Prefix-combine per group across partitions (partitions ascend).
+    val acc = scala.collection.mutable.Map.empty[String, Long]
+    val offsets: Map[(Int, String), Long] =
+      subtotals.zipWithIndex.flatMap { case (gs, pid) =>
+        gs.map { case (g, s) =>
           val o = acc.getOrElse(g, 0L)
           acc.update(g, o + s)
           ((pid, g), o)
-        }.toMap
-      // a partition is skippable iff every group it holds is already
-      // strictly past the budget on entry (== still admits zero-weight
-      // rows, matching budgetPrefix)
-      val skip: Set[Int] = subtotals.groupBy(_._1).collect {
-        case (pid, gs) if gs.forall { case (p, g, _) =>
-          offsets((p, g)) > budgetPerGroup } => pid
-      }.toSet
-      val bcOff = spark.sparkContext.broadcast(offsets)
-      val bcSkip = spark.sparkContext.broadcast(skip)
+        }
+      }.toMap
+    // a partition is skippable iff every group it holds is already
+    // strictly past the budget on entry (== still admits zero-weight
+    // rows, matching budgetPrefix)
+    val skip: Set[Int] = subtotals.indices.filter { pid =>
+      subtotals(pid).forall { case (g, _) => offsets((pid, g)) > budgetPerGroup }
+    }.toSet
+    val bcOff = spark.sparkContext.broadcast(offsets)
+    val bcSkip = spark.sparkContext.broadcast(skip)
 
-      val schema = df.schema.add(cumCol, LongType, nullable = false)
-      val selected = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (bcSkip.value.contains(pid)) Iterator.empty[Row]
-        else {
-          // explicit first-row flag: a null GROUP VALUE is legal (null
-          // lang/source), so null cannot double as the "no group yet"
-          // sentinel — it would skip the carry-in for the null group at
-          // every partition start and reset its budget per partition
-          var started = false
-          var curG: String = null
-          var run = 0L
-          it.flatMap { r =>
-            val g = r.getString(gIdx)
-            if (!started || g != curG) {
-              started = true
-              curG = g
-              run = bcOff.value.getOrElse((pid, g), 0L)
-            }
-            run += r.getLong(wIdx)
-            if (run <= budgetPerGroup) Some(Row.fromSeq(r.toSeq :+ run))
-            else None
+    val selected = sorted.mapPartitionsWithIndex { (pid, it) =>
+      if (bcSkip.value.contains(pid)) Iterator.empty[InternalRow]
+      else {
+        // explicit first-row flag: a null GROUP VALUE is legal (null
+        // lang/source), so null cannot double as the "no group yet"
+        // sentinel — it would skip the carry-in for the null group at
+        // every partition start and reset its budget per partition
+        var started = false
+        var curG: String = null
+        var run = 0L
+        it.flatMap { r =>
+          val g = group(r)
+          if (!started || g != curG) {
+            started = true
+            curG = g
+            run = bcOff.value.getOrElse((pid, g), 0L)
           }
+          run += r.getLong(wIdx)
+          if (run <= budgetPerGroup) Some(new JoinedRow(r, InternalRow(run)): InternalRow)
+          else None
         }
       }
-      val result = spark.createDataFrame(selected, schema)
-      result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try result.count() // materialize while `sorted` is still cached
-      catch { case e: Throwable =>
-        result.unpersist()
-        throw e
-      }
-      result
-    } finally sorted.unpersist()
+    }
+    Shims.internalDataFrame(spark, selected,
+      df.schema.add(cumCol, LongType, nullable = false))
   }
 
   /** Corpus snapshot diff — the monitoring step between two versions of
@@ -422,10 +410,8 @@ object CorpusSelect {
     * every row through one running-sum task at 100 TB, and qt_packing's
     * per-group window parallelizes only across groups. The shard id is
     * exact long arithmetic inside the pass-2 fold (no double division
-    * anywhere), emitted alongside `cumCol`.
-    *
-    * Persisted + materialized per the object contract (caller
-    * unpersists).
+    * anywhere), emitted alongside `cumCol`. Lazy, per the object
+    * CONTRACT.
     */
   def shardAssign(df: DataFrame, weightCol: String, shardBudget: Long,
       order: Seq[Column], cumCol: String = "cum_weight",
@@ -489,23 +475,21 @@ object CorpusSelect {
         // job per micro-batch
         val (assigned, localTotal) = shardAssignWithTotal(batch, weightCol,
           shardBudget, order, startAt = carry)
-        try {
-          assigned.write.mode("overwrite")
-            .parquet(s"$outPath/out_batch=$batchId")
-          import s.implicits._
-          Seq(carry + localTotal).toDF("total_after").coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$stateBase/state_batch=$batchId")
-          // stale-generation sweep: a fresh-checkpoint re-drive that
-          // batches the source more coarsely would otherwise leave
-          // higher out_batch/state partitions from the previous run —
-          // a plain read would return those rows TWICE. Ids above the
-          // one just committed cannot belong to this run (batch ids are
-          // monotone under a checkpoint), so they are stale by
-          // construction.
-          BatchDirs.deleteWhere(s, outPath, "out_batch=")(_ > batchId)
-          BatchDirs.deleteWhere(s, stateBase, "state_batch=")(_ > batchId)
-        } finally { assigned.unpersist(); () }
+        assigned.write.mode("overwrite")
+          .parquet(s"$outPath/out_batch=$batchId")
+        import s.implicits._
+        Seq(carry + localTotal).toDF("total_after").coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$stateBase/state_batch=$batchId")
+        // stale-generation sweep: a fresh-checkpoint re-drive that
+        // batches the source more coarsely would otherwise leave
+        // higher out_batch/state partitions from the previous run —
+        // a plain read would return those rows TWICE. Ids above the
+        // one just committed cannot belong to this run (batch ids are
+        // monotone under a checkpoint), so they are stale by
+        // construction.
+        BatchDirs.deleteWhere(s, outPath, "out_batch=")(_ > batchId)
+        BatchDirs.deleteWhere(s, stateBase, "state_batch=")(_ > batchId)
       }
       .start()
 
@@ -636,8 +620,8 @@ object CorpusSelect {
     * running-sum task); callers use it for exact quantile/threshold
     * derivations over histograms and ledgers.
     *
-    * Returns (rows + cumCol, grand total). Persisted + materialized per
-    * the object contract (caller unpersists the DataFrame).
+    * Returns (rows + cumCol, grand total); the DataFrame is lazy, per the
+    * object CONTRACT.
     */
   def cumulativeWeightsWithTotal(df: DataFrame, weightCol: String,
       order: Seq[Column], cumCol: String = "cum_weight",
@@ -660,12 +644,6 @@ object CorpusSelect {
       resolveBudget: Long => Long,
       extras: Seq[(String, (Long, Long) => Long)] = Nil): (DataFrame, Long) = {
     val spark = df.sparkSession
-    // "spark.sql.shuffle.partitions" may legitimately be non-numeric
-    // ("auto" under some AQE distributions) — fall back to cluster
-    // parallelism instead of throwing NumberFormatException
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toIntOption
-        .getOrElse(spark.sparkContext.defaultParallelism)
     require(df.schema(weightCol).dataType == LongType,
       s"$weightCol must be LongType (exact token counts); cast upstream")
     (cumCol +: extras.map(_._1)).foreach { n =>
@@ -674,36 +652,26 @@ object CorpusSelect {
     }
     val wIdx = df.schema.fieldIndex(weightCol)
 
-    // persist, NOT localCheckpoint: both passes must see identical range
-    // boundaries, and lineage must survive executor loss at cluster scale
-    // (same reasoning as ForwardFill.distributed)
-    val sorted = df.repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-
     // Pass 1: per-partition weight subtotal (driver-sized: one long per
     // partition).
-    val subtotals: Array[(Int, Long)] = sorted.rdd.mapPartitionsWithIndex {
-      (pid, it) =>
-        var s = 0L
-        it.foreach { r =>
-          val w = r.getLong(wIdx)
-          require(w >= 0, s"negative weight $w breaks prefix monotonicity")
-          s += w
-        }
-        Iterator.single((pid, s))
-    }.collect()
-
-    // Prefix-combine: carry-in for partition p = sum of partitions 0..p-1.
-    val offsets = new Array[Long](subtotals.length)
-    var acc = 0L
-    subtotals.sortBy(_._1).foreach { case (pid, s) =>
-      offsets(pid) = acc; acc += s
+    val (sorted, subtotals) = RangeScan(df, order, numPartitions,
+        "budgetPrefix") { it =>
+      var s = 0L
+      it.foreach { r =>
+        val w = r.getLong(wIdx)
+        require(w >= 0, s"negative weight $w breaks prefix monotonicity")
+        s += w
+      }
+      s
     }
-    // budget resolution sees the grand total (`acc`) — for the fraction
-    // mode this is the point where k materializes, with no extra scan
-    val budget = resolveBudget(acc)
+
+    // Prefix-combine: carry-in for partition p = sum of partitions 0..p-1;
+    // the last entry is the grand total.
+    val offsets = subtotals.scanLeft(0L)(_ + _)
+    val total = offsets.last
+    // budget resolution sees the grand total — for the fraction mode this
+    // is the point where k materializes, with no extra scan
+    val budget = resolveBudget(total)
     val bc = spark.sparkContext.broadcast(offsets)
 
     // Pass 2: skip partitions already past the budget (strictly past —
@@ -713,28 +681,19 @@ object CorpusSelect {
       case (s, (n, _)) => s.add(n, LongType, nullable = false)
     }
     val extraFns = extras.map(_._2)
-    val selected = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (bc.value(pid) > budget) Iterator.empty[Row]
+    val selected = sorted.mapPartitionsWithIndex { (pid, it) =>
+      if (bc.value(pid) > budget) Iterator.empty[InternalRow]
       else {
         var run = bc.value(pid)
         it.map { r =>
           run += r.getLong(wIdx)
           (run, r)
         }.takeWhile(_._1 <= budget).map { case (cum, r) =>
-          Row.fromSeq(r.toSeq ++ (cum +: extraFns.map(_(cum, r.getLong(wIdx)))))
+          new JoinedRow(r, InternalRow.fromSeq(
+            cum +: extraFns.map(_(cum, r.getLong(wIdx))))): InternalRow
         }
       }
     }
-    val result = spark.createDataFrame(selected, schema)
-    result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try result.count() // materialize while `sorted` is still cached
-    catch { case e: Throwable =>
-      // on failure the caller never receives a handle to unpersist —
-      // release the half-materialized cache before propagating
-      result.unpersist()
-      throw e
-    }
-    (result, acc)
-    } finally sorted.unpersist()
+    (Shims.internalDataFrame(spark, selected, schema), total)
   }
 }

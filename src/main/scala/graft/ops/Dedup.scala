@@ -952,7 +952,7 @@ object Dedup {
       catch { case e: Throwable =>
         // on failure the caller never receives a handle to unpersist —
         // release the half-materialized cache before propagating (same
-        // contract as CorpusSelect.budgetPrefix)
+        // contract as minhashNearDups)
         result.unpersist()
         throw e
       }
@@ -1348,7 +1348,7 @@ object Dedup {
     * rebuild is `array_sort` + `filter` + `transform` over a
     * collected struct array.
     *
-    * CONTRACT (same as [[CorpusSelect.budgetPrefix]]): the returned
+    * CONTRACT (same as [[minhashNearDups]]): the returned
     * DataFrame is persisted (MEMORY_AND_DISK) and already materialized
     * — the caller owns the blocks and must `unpersist()` when done (or
     * clearCache in a harness). The corpus-sized segment intermediate is

@@ -39,7 +39,7 @@ object Multimodal {
     // bytes/row at ANY scale") is enforced here rather than assumed of
     // the caller (the mapPartitions below blocks column pruning, so the
     // projection cannot be left to Catalyst); measured plan-identical on
-    // the gates, which already pre-project
+    // the gates, which already pre-project. The id is column 0.
     df.select(col(idCol))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
 
@@ -199,14 +199,13 @@ object Multimodal {
     * oracle (h ≤ 126 < 256 ⇒ the row-gray sequence wraps at most once).
     */
   def imagePayload(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val idIdx = fanOutSeed(df, idCol).schema.fieldIndex(idCol)
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = false)))
     fanOutSeed(df, idCol).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false) // no temp-file spills per encode
       it.map { r =>
-        val id = r.getLong(idIdx)
+        val id = r.getLong(0)
         val w = (id % 95 + 32).toInt
         val h = ((id * 7) % 95 + 32).toInt
         val img = new java.awt.image.BufferedImage(
@@ -462,7 +461,6 @@ object Multimodal {
     * RIFF/WAVE container.
     */
   def audioPayload(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val idIdx = fanOutSeed(df, idCol).schema.fieldIndex(idCol)
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = false)))
@@ -471,7 +469,7 @@ object Multimodal {
       val fmt = new AudioFormat(AudioRate.toFloat, 16, 1, true, false) // 16-bit LE mono
       val writers = wavWriters() // once per task — see wavWriters
       it.map { r =>
-        val id = r.getLong(idIdx)
+        val id = r.getLong(0)
         val n = (id % 800 + 100).toInt
         val pcm = new Array[Byte](n * 2)
         var i = 0
@@ -535,7 +533,6 @@ object Multimodal {
     * does once any burst exists).
     */
   def audioPayloadMarked(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val idIdx = fanOutSeed(df, idCol).schema.fieldIndex(idCol)
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = false)))
@@ -544,7 +541,7 @@ object Multimodal {
       val fmt = new AudioFormat(AudioRate.toFloat, 16, 1, true, false)
       val writers = wavWriters() // once per task — see wavWriters
       it.map { r =>
-        val id = r.getLong(idIdx)
+        val id = r.getLong(0)
         val n = (id % 800 + 100).toInt
         val pcm = new Array[Byte](n * 2)
         var i = 0
@@ -666,14 +663,13 @@ object Multimodal {
     * sequence wraps at most once, same derivation as [[imagePayload]]).
     */
   def videoPayload(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val idIdx = fanOutSeed(df, idCol).schema.fieldIndex(idCol)
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = false)))
     fanOutSeed(df, idCol).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       it.map { r =>
-        val id = r.getLong(idIdx)
+        val id = r.getLong(0)
         val nf = (id % 8 + 2).toInt
         val w = (id % 31 + 16).toInt
         val h = ((id * 3) % 31 + 16).toInt
@@ -783,14 +779,13 @@ object Multimodal {
   def videoPayloadScenes(df: DataFrame, idCol: String = "doc_id",
       sceneLen: Int = 4): DataFrame = {
     require(sceneLen >= 1, s"sceneLen must be >= 1, got $sceneLen")
-    val idIdx = fanOutSeed(df, idCol).schema.fieldIndex(idCol)
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("payload", BinaryType, nullable = false)))
     fanOutSeed(df, idCol).mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
       it.map { r =>
-        val id = r.getLong(idIdx)
+        val id = r.getLong(0)
         val nf = (id % 8 + 6).toInt
         val w = (id % 31 + 16).toInt
         val h = ((id * 3) % 31 + 16).toInt

@@ -22,12 +22,10 @@ object RobustStats {
     val hist = df.groupBy(valueCol).agg(count(lit(1)).as("_hn"))
     val (cum, n) = CorpusSelect.cumulativeWeightsWithTotal(
       hist, "_hn", Seq(col(valueCol)), "_cw")
-    try {
-      require(n > 0, "exactKth of an empty input")
-      val k = kOf(n)
-      require(k >= 1 && k <= n, s"k=$k outside [1, $n]")
-      cum.filter(col("_cw") >= k).agg(min(col(valueCol))).head().getLong(0)
-    } finally cum.unpersist()
+    require(n > 0, "exactKth of an empty input")
+    val k = kOf(n)
+    require(k >= 1 && k <= n, s"k=$k outside [1, $n]")
+    cum.filter(col("_cw") >= k).agg(min(col(valueCol))).head().getLong(0)
   }
 
   /** Lower median — the ⌈n/2⌉-th smallest (= DuckDB `quantile_disc(x,

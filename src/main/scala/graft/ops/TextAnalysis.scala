@@ -472,22 +472,20 @@ object TextAnalysis {
     val hist = scored.groupBy("s_micro").agg(count(lit(1)).as("hn"))
     val (cum, n) = CorpusSelect.cumulativeWeightsWithTotal(
       hist, "hn", Seq(col("s_micro")), "cw")
-    try {
-      if (n == 0L) {
-        scored.withColumn("bucket", lit("head")).limit(0)
-      } else {
-        val k1 = math.max(n / 3, 1L)
-        val k2 = math.max(2 * n / 3, 1L)
-        val cuts = cum.agg(
-          min(when(col("cw") >= k1, col("s_micro"))).as("c1"),
-          min(when(col("cw") >= k2, col("s_micro"))).as("c2")).head()
-        val (c1, c2) = (cuts.getLong(0), cuts.getLong(1))
-        scored.select(col(idCol), col("s_micro"),
-          when(col("s_micro") <= c1, "tail")
-            .when(col("s_micro") <= c2, "middle")
-            .otherwise("head").as("bucket"))
-      }
-    } finally cum.unpersist()
+    if (n == 0L) {
+      scored.withColumn("bucket", lit("head")).limit(0)
+    } else {
+      val k1 = math.max(n / 3, 1L)
+      val k2 = math.max(2 * n / 3, 1L)
+      val cuts = cum.agg(
+        min(when(col("cw") >= k1, col("s_micro"))).as("c1"),
+        min(when(col("cw") >= k2, col("s_micro"))).as("c2")).head()
+      val (c1, c2) = (cuts.getLong(0), cuts.getLong(1))
+      scored.select(col(idCol), col("s_micro"),
+        when(col("s_micro") <= c1, "tail")
+          .when(col("s_micro") <= c2, "middle")
+          .otherwise("head").as("bucket"))
+    }
   }
 
   /** Stupid Backoff trigram scoring (Brants et al. 2007, "Large Language

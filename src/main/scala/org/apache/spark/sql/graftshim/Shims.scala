@@ -34,4 +34,12 @@ object Shims {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `c` without its sort direction, if it has one (`col("x").desc` →
+    * `col("x")`): the form a hash partitioning accepts.
+    */
+  def unsorted(c: Column): Column = c.node match {
+    case s: org.apache.spark.sql.internal.SortOrder => new Column(s.child)
+    case _ => c
+  }
 }

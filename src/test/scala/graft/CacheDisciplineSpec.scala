@@ -32,13 +32,14 @@ import graft.can.{Bucketer, CombinePolicy, ForwardFill}
   *
   * Caller-owned handles (released by this spec, per each scaladoc
   * CONTRACT): the persisted+materialized results of the minhash family,
-  * the segment-dedup family, the CorpusSelect prefix family, the
-  * trainers' final word relations, `Bucketer.exactDistributed`, and the
-  * `EvalShingles` / `EvalSignatures` broadcast-side handles.
-  * `ForwardFill.distributed` persists nothing any more; its entry stays
-  * to keep it that way. Everything else must clean
-  * up after itself — a new `persist` without a release turns THIS spec
-  * red instead of waiting for a round-review find.
+  * the segment-dedup family, the trainers' final word relations, and the
+  * `EvalShingles` / `EvalSignatures` broadcast-side handles. The
+  * two-pass range scans (`ForwardFill.distributed`,
+  * `Bucketer.exactDistributed`, the CorpusSelect prefix family) persist
+  * nothing: their entries release nothing and stay to keep it that way.
+  * Everything else must clean up after itself — a new `persist` without
+  * a release turns THIS spec red instead of waiting for a round-review
+  * find.
   */
 class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
   lazy val spark = SparkTestSession.spark
@@ -161,9 +162,9 @@ class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
     * `persist(` (the house commentary style) must not turn this red.
     */
   private val PersistingFiles = Set(
-    "ops/CorpusSelect.scala", "ops/WordPiece.scala", "ops/Similarity.scala",
+    "ops/WordPiece.scala", "ops/Similarity.scala",
     "ops/Dedup.scala", "ops/Ranking.scala", "ops/Bpe.scala",
-    "ops/UnigramLm.scala", "can/Bucketer.scala")
+    "ops/UnigramLm.scala")
 
   test("enumeration pin: the set of persisting src/main files is known") {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -397,25 +398,33 @@ class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
     }
   }
 
-  // ---- CorpusSelect prefix family (caller-owned results) -------------
+  // ---- CorpusSelect prefix family (lazy results, nothing persisted) ---
+
+  /** Drive for an entry point that persists nothing: run an action on
+    * its lazy result and release nothing.
+    */
+  private def unowned(dfs: DataFrame*): Seq[() => Unit] = {
+    dfs.foreach(_.count())
+    Nil
+  }
 
   test("CorpusSelect.budgetPrefix returns to cache baseline") {
     checkEntry("budgetPrefix") {
-      owned(CorpusSelect.budgetPrefix(weighted, "w", 50L,
+      unowned(CorpusSelect.budgetPrefix(weighted, "w", 50L,
         Seq(col("id").asc)))
     }
   }
 
   test("CorpusSelect.fractionPrefix returns to cache baseline") {
     checkEntry("fractionPrefix") {
-      owned(CorpusSelect.fractionPrefix(weighted, "w", 1L, 2L,
+      unowned(CorpusSelect.fractionPrefix(weighted, "w", 1L, 2L,
         Seq(col("id").asc)))
     }
   }
 
   test("CorpusSelect.groupedBudgetPrefix returns to cache baseline") {
     checkEntry("groupedBudgetPrefix") {
-      owned(CorpusSelect.groupedBudgetPrefix(weighted, "grp", "w", 20L,
+      unowned(CorpusSelect.groupedBudgetPrefix(weighted, "grp", "w", 20L,
         Seq(col("id").asc)))
     }
   }
@@ -425,7 +434,7 @@ class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
       val (r, total) = CorpusSelect.shardAssignWithTotal(weighted, "w", 10L,
         Seq(col("id").asc))
       assert(total > 0)
-      owned(r)
+      unowned(r)
     }
   }
 
@@ -434,7 +443,7 @@ class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
       val (r, total) = CorpusSelect.cumulativeWeightsWithTotal(weighted, "w",
         Seq(col("id").asc))
       assert(total > 0)
-      owned(r)
+      unowned(r)
     }
   }
 
@@ -485,39 +494,57 @@ class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
 
   // ---- can: ForwardFill / Bucketer (the two original instances) -------
 
-  test("ForwardFill.distributed returns to cache baseline (result owned)") {
+  test("ForwardFill.distributed returns to cache baseline (persists nothing)") {
     checkEntry("ForwardFill.distributed") {
-      owned(ForwardFill.distributed(series, "ts_ms", numPartitions = 3))
+      unowned(ForwardFill.distributed(series, "ts_ms", numPartitions = 3))
     }
   }
 
-  test("Bucketer.exactDistributed returns to cache baseline (result owned)") {
+  test("Bucketer.exactDistributed returns to cache baseline (persists nothing)") {
     checkEntry("Bucketer.exactDistributed") {
-      owned(Bucketer.exactDistributed(series, 10.0,
+      unowned(Bucketer.exactDistributed(series, 10.0,
         CombinePolicy.LastWins, numPartitions = 3))
     }
   }
 
   // ---- composition: the exact shape that leaked in r19 ------------------
-  // CanPipeline.decodeLog(exact, forwardFill) runs exactDistributed with
-  // its in-fold ForwardFill.distributed and hands the caller only the
-  // filled result (its OWNERSHIP NOTE); the leaf tests above can't see a
-  // leak in the composition glue, and that glue is where the r19
-  // instance lived.
+  // CanPipeline.decodeLog(exact, forwardFill) runs exactDistributed and
+  // then ForwardFill.distributed; the leaf tests above can't see a leak in
+  // the composition glue, and that glue is where the r19 instance lived.
 
-  test("CanPipeline.decodeLog exact+forwardFill returns to cache baseline " +
-      "(composed ownership)") {
-    val log = java.nio.file.Files.createTempDirectory("cds_decode").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$log/a.log"),
+  private lazy val exactLog = {
+    val dir = java.nio.file.Files.createTempDirectory("cds_decode").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.log"),
       (0 until 120).map { i =>
         val raw = 100 + i
         val hex = f"${raw & 0xFF}%02X${(raw >> 8) & 0xFF}%02X0000"
         f"(${i * 5000L / 1000000}%d.${i * 5000L % 1000000}%06d) vcan0 100#$hex"
       }.mkString("\n").getBytes("UTF-8"))
+    dir
+  }
+
+  test("CanPipeline.decodeLog exact+forwardFill returns to cache baseline " +
+      "(composed ownership)") {
     checkEntry("decodeLog(exact, ffill)") {
-      owned(graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", log,
+      unowned(graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", exactLog,
         graft.can.CanPipelineConfig(cacheMs = 12.0, exact = true,
           forwardFill = true)))
+    }
+  }
+
+  // the CLI's `--file --exact --forward-fill` shape: observed counters on,
+  // the result written, and only the returned frame released — the frame
+  // it gets is the rows-observing wrapper, so a persisted result below it
+  // would match no release
+  test("CanPipeline.decodeLog exact+forwardFill with observed metrics, " +
+      "written, returns to cache baseline") {
+    val out = tmpDir("cds_decode_out")
+    checkEntry("decodeLog(exact, ffill, observeMetrics) + write") {
+      val wide = graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", exactLog,
+        graft.can.CanPipelineConfig(cacheMs = 12.0, exact = true,
+          forwardFill = true, observeMetrics = true))
+      wide.write.mode("append").parquet(out)
+      owned(wide)
     }
   }
 }

@@ -43,23 +43,18 @@ class PipelineMetricsSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(progress)
   }
 
-  test("T7 exact keyless: frames counted via accumulator (RDD passes bypass " +
-      "observe) — the 'Received 0 packets' wart") {
-    // the CLI's shape: session hint at construction, so packets is
-    // readable as soon as the exact pipeline has filled its accumulator —
-    // no listener callback needed first
-    val progress = new PipelineMetrics.Progress(quiet = true, sessionHint = Some(spark))
+  test("T7 exact keyless: parsed packets are observed on the exact path " +
+      "too — the 'Received 0 packets' wart") {
+    val progress = new PipelineMetrics.Progress(quiet = true)
     spark.listenerManager.register(progress)
     try {
       val cfg = CanPipelineConfig(cacheMs = 10.0, exact = true, observeMetrics = true)
-      // exactDistributed runs its segment passes eagerly at construction;
-      // the accumulator holds the 6 decoded (known-id) frames already here
+      // exactDistributed stages its input and runs pass 1 at construction;
+      // the 7 parsed packets arrive with that execution
       val wide = CanPipeline.decodeLog(spark, "fixtures/mini.dbc", "fixtures/mini.log", cfg)
-      assert(progress.packets == 6,
-        s"exact-path frame counter: got ${progress.packets}, want 6")
+      eventually() { progress.packets == 7 }
       assert(wide.count() == 3) // exact buckets open at +0, +12, +50
-      // the progress line now claims a packet count on the exact path too
-      eventually() { progress.rows.get() == 3 && progress.packets == 6 }
+      eventually() { progress.rows.get() == 3 && progress.packets == 7 }
     } finally spark.listenerManager.unregister(progress)
   }
 
@@ -93,10 +88,10 @@ class PipelineMetricsSpec extends AnyFunSuite {
       val (perFrame, _, frameRows, frameWritten) = run("perframe",
         CanPipelineConfig(forwardFill = true, observeMetrics = true))
       assert((perFrame, frameRows, frameWritten) == ((7L, 6L, 6L)))
-      // exact keyless counts decoded frames (the 6 known-id ones) through
-      // its own accumulator — PipelineMetrics.newExactFramesCounter
+      // exact keyless: the 7 parsed frames are observed once, below its
+      // range scan, and no accumulator is involved
       assert(run("exact", CanPipelineConfig(cacheMs = 10.0, exact = true,
-        forwardFill = true, observeMetrics = true)) == ((0L, 6L, 3L, 3L)))
+        forwardFill = true, observeMetrics = true)) == ((7L, 0L, 3L, 3L)))
     } finally spark.listenerManager.unregister(progress)
   }
 

@@ -74,10 +74,10 @@ class CliStreamSmokeSpec extends AnyFunSuite {
         "batch CLI did not exit")
       val log = scala.io.Source.fromFile(logFile).mkString
       assert(proc.exitValue() == 0, s"CLI failed; log:\n${log.takeRight(4000)}")
-      // 6 known-id frames in mini.log; before the accumulator fix the
-      // exact path printed no packet count at all (and once printed
-      // 'Received 0 packets')
-      assert(log.contains("Received 6 packets"),
+      // 7 parsed packets in mini.log (the reference's `messages`),
+      // observed on the exact path like on every other; the exact path
+      // once printed no packet count at all (and once 'Received 0 packets')
+      assert(log.contains("Received 7 packets"),
         s"exact-mode progress line wrong; log:\n${log.takeRight(4000)}")
       assert(spark.read.parquet(outDir).count() == 3)
     } finally {
