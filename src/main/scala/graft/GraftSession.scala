@@ -55,15 +55,19 @@ object GraftSession {
    * 0.11 vs 0.14, qc_gap_report 0.36 vs 0.44, q18 1.70 vs 1.78) with no
    * query worse. At production scale the choice only touches R ≤ 8
    * exchanges either way. */
-  val BypassMergeThreshold: String = {
-    val v = sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "8")
-    // fail fast with an actionable message: a non-numeric value would
-    // otherwise surface only at session build as a generic Spark conf
-    // error far from the env var that caused it
-    require(v.nonEmpty && v.forall(_.isDigit),
-      s"SPARK_GRAFT_BYPASS_MERGE must be a nonnegative integer, got '$v'")
-    v
-  }
+  val BypassMergeThreshold: String =
+    bypassMergeThreshold(sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "8"))
+
+  /** Validates a `SPARK_GRAFT_BYPASS_MERGE` value: fail fast with an
+    * actionable message, since a bad value would otherwise surface only at
+    * session build as a generic Spark conf error far from the env var
+    * that caused it. Surrounding blanks are ignored; a value past
+    * `Int.MaxValue` is rejected like any other non-integer.
+    */
+  private[graft] def bypassMergeThreshold(v: String): String =
+    v.trim.toIntOption.filter(_ >= 0).map(_.toString).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BYPASS_MERGE must be a nonnegative integer, got '$v'"))
 
   /** NOTE: static (build-time) confs take effect only on the session that
     * creates the JVM's SparkContext — a `getOrCreate` that reuses an

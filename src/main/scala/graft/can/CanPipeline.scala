@@ -8,6 +8,13 @@ import graft.dbc._
   * candump log → parse → decode → bucket → (forward-fill) → wide table,
   * ready for `write.parquet` (K1).
   *
+  * A log read by [[CanPipeline.decodeLog]] keeps its line order split by
+  * split, so its tumbling buckets, with or without forward fill, fold
+  * each split in that order ([[SplitTumbling]]): one staging shuffle, no
+  * aggregate and no range sort. If the log turns out not to be in bucket
+  * order, the same call runs the general plan of [[CanPipeline.fromFrames]]
+  * instead, so results never depend on the order.
+  *
   * Config mirrors the reference CLI (`/root/reference/src/arguments.h:12`):
   * `--cache <ms>` → `cacheMs`; `--forward-fill` → `forwardFill`;
   * `--no-adjust-timestamp` → `adjustTimestamp = false`. Divergences from the
@@ -34,8 +41,35 @@ object CanPipeline {
       cfg: CanPipelineConfig = CanPipelineConfig()): DataFrame = {
     val net = DbcParser.parseFile(dbcPath, cfg.lenientDbc)
     val frames = CandumpParser.readLog(spark, logPath, cfg.adjustTimestamp)
-    fromFrames(net, frames, cfg)
+    fromSplitOrderedFrames(net, frames, cfg)
   }
+
+  /** [[fromFrames]] for frames whose partitions hold the input in order,
+    * split by split, as [[CandumpParser.readLog]]'s do. Tumbling buckets
+    * (`!exact`, `cacheMs > 0`, at most [[Bucketer.CodegenArgWidthLimit]]
+    * signals) run [[SplitTumbling]] now, which folds each split in that
+    * order. When the bucket ids turn out to decrease somewhere, the result
+    * is [[fromFrames]]'s plan over the same frames, unobserved: that
+    * costs one more parse and decode of the input, and the frames are
+    * still counted once, by the fold. Any other config is [[fromFrames]].
+    */
+  private[graft] def fromSplitOrderedFrames(net: Network, frames: DataFrame,
+      cfg: CanPipelineConfig): DataFrame =
+    if (cfg.exact || cfg.cacheMs <= 0 ||
+        net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit)
+      fromFrames(net, frames, cfg)
+    else {
+      val wide = SignalDecoder.wideFrame(net,
+        withMetrics(frames, cfg, PipelineMetrics.observeFrames), cfg.typing,
+        carryCols = cfg.exactKeys)
+      val result = SplitTumbling(wide, cfg.cacheMs, cfg.combine, cfg.forwardFill)
+        .getOrElse {
+          log.info("bucket ids decrease across the input's splits: " +
+            "running the general tumbling plan")
+          bucketed(net, frames, cfg)
+        }
+      withMetrics(result, cfg, PipelineMetrics.observeRows)
+    }
 
   /** T7: thread the observed frame/row counters through when asked. */
   private def withMetrics(df: DataFrame, cfg: CanPipelineConfig,
@@ -67,11 +101,17 @@ object CanPipeline {
   }
 
   /** frames(ts_ms, can_id, data) → bucketed wide table. */
-  def fromFrames(net: Network, frames0: DataFrame, cfg: CanPipelineConfig): DataFrame = {
-    val frames = withMetrics(frames0, cfg, PipelineMetrics.observeFrames)
+  def fromFrames(net: Network, frames: DataFrame, cfg: CanPipelineConfig): DataFrame =
+    withMetrics(
+      bucketed(net, withMetrics(frames, cfg, PipelineMetrics.observeFrames), cfg),
+      cfg, PipelineMetrics.observeRows)
+
+  /** The general plan: decode, bucket and fill, with no counters added. */
+  private def bucketed(net: Network, frames: DataFrame,
+      cfg: CanPipelineConfig): DataFrame = {
     val wide = SignalDecoder.wideFrame(net, frames, cfg.typing,
       carryCols = cfg.exactKeys)
-    val result = if (cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.nonEmpty)
+    if (cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.nonEmpty)
       // keyed: independent folds per key, forward-fill in-pass
       Bucketer.exactFold(wide, cfg.cacheMs, cfg.exactKeys, cfg.combine, cfg.forwardFill)
     else {
@@ -100,7 +140,6 @@ object CanPipeline {
         ForwardFill.distributed(bucketed, DbcColumns.TimeCol)
       else bucketed
     }
-    withMetrics(result, cfg, PipelineMetrics.observeRows)
   }
 }
 

@@ -30,6 +30,11 @@ import graft.plans.RangeScan
   *          its broadcast carry-in.
   *     Two shuffles of the input and no cache; parallelism = numPartitions
   *     throughout.
+  *
+  * The CLI's `--file` tumbling path fills without either: [[SplitTumbling]]
+  * folds the log split by split in file order, computes the same carry-ins
+  * over its bucket rows, and equals [[distributed]] over the tumbling
+  * aggregate row for row (falling back to it for an unordered log).
   */
 object ForwardFill {
 

@@ -62,7 +62,10 @@ object PipelineMetrics {
     wide.observe(RowsMetric, count(lit(1)).as("rows"))
 
   /** Batch listener: accumulates totals and prints the reference-style
-    * progress line after each action touching the observed plans.
+    * progress line after each action that delivers the rows counter, so
+    * once per write. An execution that delivers only the frames counter
+    * (the pass 1 of [[SplitTumbling]] or of a range scan) adds to the
+    * packet total silently.
     *
     * `sessionHint` scopes the [[newExactFramesCounter]] lookup from
     * construction onwards; without it the scope is learned from the first
@@ -98,9 +101,9 @@ object PipelineMetrics {
         sawFrames = true
         messages.addAndGet(r.getAs[Long]("messages"))
       }
-      qe.observedMetrics.get(RowsMetric)
-        .foreach(r => rows.addAndGet(r.getAs[Long]("rows")))
-      if (!quiet && qe.observedMetrics.nonEmpty) {
+      val wrote = qe.observedMetrics.get(RowsMetric)
+      wrote.foreach(r => rows.addAndGet(r.getAs[Long]("rows")))
+      if (!quiet && wrote.isDefined) {
         val pk = packets
         val recv = if (sawFrames || pk > 0) s"Received $pk packets, " else ""
         println(s"${recv}wrote ${rows.get()} rows")

@@ -115,10 +115,7 @@ case class ArgImproves(newV: Expression, newO: Expression,
     if (no == null) return false
     val cv = curV.eval(input)
     if (cv == null) return true
-    val co = curO.eval(input)
-    val c = ordOrdering.compare(no, co)
-    if (isMax) c > 0 || (c == 0 && valOrdering.compare(nv, cv) > 0)
-    else c < 0 || (c == 0 && valOrdering.compare(nv, cv) < 0)
+    ArgImproves.beats(nv, no, cv, curO.eval(input), isMax, ordOrdering, valOrdering)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -152,6 +149,21 @@ case class ArgImproves(newV: Expression, newO: Expression,
       newChildren: IndexedSeq[Expression]): ArgImproves =
     copy(newV = newChildren(0), newO = newChildren(1),
       curV = newChildren(2), curO = newChildren(3))
+}
+
+object ArgImproves {
+  /** The strict lexicographic test of [[ArgImproves.eval]] on non-null
+    * values: `(newO, newV)` beats `(curO, curV)`. The orderings are
+    * `TypeUtils.getInterpretedOrdering` of the two types, so NaN and ±0.0
+    * compare as in the generated code. Shared with the split-order fold
+    * ([[graft.can.SplitTumbling]]), which must pick the same winner.
+    */
+  def beats(newV: Any, newO: Any, curV: Any, curO: Any, isMax: Boolean,
+      ordOrdering: Ordering[Any], valOrdering: Ordering[Any]): Boolean = {
+    val c = ordOrdering.compare(newO, curO)
+    if (isMax) c > 0 || (c == 0 && valOrdering.compare(newV, curV) > 0)
+    else c < 0 || (c == 0 && valOrdering.compare(newV, curV) < 0)
+  }
 }
 
 object ArgExtremum {

@@ -34,6 +34,10 @@ import org.apache.spark.sql.graftshim.Shims
   * (`Dataset.observe`) in the input are delivered once, with this
   * execution; a frame built over the returned RDD hides its input, so
   * its own actions report only what is observed on top of it.
+  *
+  * When the input's partitions already hold the order, split by split
+  * (a log read as Hadoop splits), [[SplitScan]] does the same two passes
+  * with no sampling job and no range sort.
   */
 object RangeScan {
 

@@ -547,4 +547,19 @@ class CacheDisciplineSpec extends AnyFunSuite with ops.StreamingFixture {
       owned(wide)
     }
   }
+
+  // the CLI's `--file --cache --forward-fill` shape: the split-order fold
+  // stages its rows in a shuffle, so nothing is persisted and the caller
+  // releases nothing
+  test("CanPipeline.decodeLog tumbling+forwardFill (split-order fold), " +
+      "written, persists nothing") {
+    val out = tmpDir("cds_split_out")
+    checkEntry("decodeLog(tumbling, ffill, observeMetrics) + write") {
+      val wide = graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", exactLog,
+        graft.can.CanPipelineConfig(cacheMs = 12.0, forwardFill = true,
+          observeMetrics = true))
+      wide.write.mode("append").parquet(out)
+      Nil
+    }
+  }
 }

@@ -95,6 +95,31 @@ class PipelineMetricsSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(progress)
   }
 
+  test("T7 tumbling + fill on the split-order fold and on its fallback: " +
+      "packets and rows counted once") {
+    // mini.log is in time order, so decodeLog folds it split by split; its
+    // lines reversed make the bucket ids decrease, so the same call runs
+    // the general plan after the fold has counted the frames
+    val reversed = java.nio.file.Files.createTempDirectory("graft_t7_rev").resolve("r.log")
+    java.nio.file.Files.write(reversed, scala.io.Source.fromFile("fixtures/mini.log")
+      .getLines().toSeq.reverse.mkString("\n").getBytes("UTF-8"))
+    val out = java.nio.file.Files.createTempDirectory("graft_t7_split").toString
+    val progress = new PipelineMetrics.Progress(quiet = true)
+    spark.listenerManager.register(progress)
+    try {
+      for ((name, log) <- Seq("ordered" -> "fixtures/mini.log", "fallback" -> reversed.toString)) {
+        val (m0, r0) = (progress.messages.get(), progress.rows.get())
+        val wide = CanPipeline.decodeLog(spark, "fixtures/mini.dbc", log,
+          CanPipelineConfig(cacheMs = 10.0, forwardFill = true, observeMetrics = true))
+        wide.write.parquet(s"$out/$name")
+        assert(spark.read.parquet(s"$out/$name").count() == 3, name)
+        eventually() { progress.rows.get() - r0 == 3 }
+        Thread.sleep(500) // a late duplicate delivery would land here
+        assert((progress.messages.get() - m0, progress.rows.get() - r0) == ((7L, 3L)), name)
+      }
+    } finally spark.listenerManager.unregister(progress)
+  }
+
   test("T7 streaming: StreamingProgress accumulates per-micro-batch counts") {
     val net = DbcParser.parseFile("fixtures/mini.dbc")
     val progress = new PipelineMetrics.StreamingProgress(quiet = true)

@@ -53,17 +53,19 @@ class CliStreamSmokeSpec extends AnyFunSuite {
     assert(log2.contains("non-numeric") && log2.contains("usage:"), log2)
   }
 
-  test("CLI batch --exact prints the real packet count (T7 exact metric)") {
-    val outDir = java.nio.file.Files.createTempDirectory("cli_exact").toString + "/out"
+  /** Runs the batch CLI on `fixtures/mini.log` with `--file` and `flags`
+    * in its own JVM; returns its output and the output directory.
+    */
+  private def batchCli(name: String, flags: String*): (String, String) = {
+    val outDir = java.nio.file.Files.createTempDirectory(name).toString + "/out"
     val javaBin = sys.props("java.home") + "/bin/java"
     val cp = sys.props("java.class.path")
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx2g", "-Dspark.ui.enabled=false", "-Dspark.master=local[4]",
       "-Dspark.sql.shuffle.partitions=4",
       "-cp", cp, "graft.cli.Main", "fixtures/mini.dbc",
-      "--if", "fixtures/mini.log", "--of", outDir,
-      "--file", "--cache", "10", "--exact")
-    val logFile = java.nio.file.Files.createTempFile("cli_exact", ".log").toFile
+      "--if", "fixtures/mini.log", "--of", outDir, "--file") ++ flags
+    val logFile = java.nio.file.Files.createTempFile(name, ".log").toFile
     val pb = new ProcessBuilder(cmd: _*)
     pb.directory(new java.io.File(sys.props("user.dir")))
     pb.redirectErrorStream(true)
@@ -74,15 +76,38 @@ class CliStreamSmokeSpec extends AnyFunSuite {
         "batch CLI did not exit")
       val log = scala.io.Source.fromFile(logFile).mkString
       assert(proc.exitValue() == 0, s"CLI failed; log:\n${log.takeRight(4000)}")
-      // 7 parsed packets in mini.log (the reference's `messages`),
-      // observed on the exact path like on every other; the exact path
-      // once printed no packet count at all (and once 'Received 0 packets')
-      assert(log.contains("Received 7 packets"),
-        s"exact-mode progress line wrong; log:\n${log.takeRight(4000)}")
-      assert(spark.read.parquet(outDir).count() == 3)
+      (log, outDir)
     } finally {
       proc.destroyForcibly()
       proc.waitFor()
+    }
+  }
+
+  /** The progress lines in a CLI log. */
+  private def progressLines(log: String): Seq[String] =
+    log.linesIterator.filter(_.matches("(Received \\d+ packets, )?wrote \\d+ rows")).toSeq
+
+  test("CLI batch --exact prints the real packet count (T7 exact metric)") {
+    val (log, outDir) = batchCli("cli_exact", "--cache", "10", "--exact")
+    // 7 parsed packets in mini.log (the reference's `messages`),
+    // observed on the exact path like on every other; the exact path
+    // once printed no packet count at all (and once 'Received 0 packets')
+    assert(log.contains("Received 7 packets"),
+      s"exact-mode progress line wrong; log:\n${log.takeRight(4000)}")
+    assert(spark.read.parquet(outDir).count() == 3)
+  }
+
+  test("CLI batch --forward-fill and --exact print one progress line per " +
+      "write, never an interim 'wrote 0 rows'") {
+    // the split-order fold (tumbling) and the range scan (exact) each run
+    // an execution that delivers only the frames counter before the write
+    for (flags <- Seq(Seq("--cache", "10", "--forward-fill"),
+        Seq("--cache", "10", "--exact"))) {
+      val (log, outDir) = batchCli("cli_progress", flags: _*)
+      assert(progressLines(log) == Seq("Received 7 packets, wrote 3 rows"),
+        s"${flags.mkString(" ")}: progress lines ${progressLines(log)}; " +
+          s"log:\n${log.takeRight(4000)}")
+      assert(spark.read.parquet(outDir).count() == 3)
     }
   }
 

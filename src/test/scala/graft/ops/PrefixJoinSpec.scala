@@ -97,6 +97,36 @@ class PrefixJoinSpec extends AnyFunSuite {
     } finally { audit.unpersist(); () }
   }
 
+  test("recallAudit just above lshThreshold = 3/5 runs the full verify " +
+      "and equals the two-pipeline composition on pairs exactly at J = 3/5") {
+    val corpus = ((0 until 40).map { i =>
+      (i.toLong, (0 until 6).map(j => s"w${(i % 20) + j}").mkString(" "))
+    }) ++ ((0 until 10).map { i =>
+      (100L + i, ((0 until 5).map(j => s"w${(i % 20) + j}") :+ s"z$i")
+        .mkString(" "))
+    })
+    val docs = corpus.toDF("doc_id", "text")
+    val lsh = Math.nextUp(0.6)
+    val audit = Dedup.recallAudit(docs, "doc_id", col("text"), lshThreshold = lsh)
+    try {
+      val got = audit.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getBoolean(3))).toSet
+      val exact = Dedup.prefixFilterNearDups(docs, "doc_id", col("text"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet
+      assert(exact.exists(_._3 == 0.6), "fixture must hold pairs at J = 3/5")
+      val mh = Dedup.minhashNearDups(docs, "doc_id", col("text"), threshold = lsh)
+      val mhPairs =
+        try mh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        finally mh.unpersist()
+      assert(got == exact.map { case (a, b, j) => (a, b, j, mhPairs.contains((a, b))) })
+      // the verify's own threshold now excludes J = 3/5, so those exact
+      // pairs are never found by minhash
+      assert(got.filter(_._3 == 0.6).forall(!_._4))
+    } finally { audit.unpersist(); () }
+  }
+
   test("candidate-volume observation: candidate_pairs rides the plan, " +
       "counts pre-distinct prefix collisions, and bounds the output") {
     val docs = Seq(

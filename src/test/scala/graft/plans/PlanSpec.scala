@@ -3,6 +3,7 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.SparkTestSession
 import graft.can.{CandumpParser, ForwardFill}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -605,6 +606,70 @@ class PlanSpec extends AnyFunSuite {
         .orderBy("t").collect().toSeq
       assert(got == want, s"numPartitions = $n")
     }
+  }
+
+  /** Stages run and executed plans of the SQL executions reported while
+    * `body` runs.
+    */
+  private def jobShape(body: => Unit): (Int, Seq[String]) = {
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val stageListener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+    }
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(stageListener)
+    spark.listenerManager.register(planListener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(stageListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    (stages.get, plans.asScala.toSeq)
+  }
+
+  test("CAN --file tumbling + fill on a time-ordered log: split-order fold " +
+      "with no bucket aggregate, no range exchange and fewer than the " +
+      "general plan's 8 stages; a reversed log takes the general plan") {
+    // 20,000 frames 1 µs apart over mini.dbc's four messages: 40 buckets
+    // of 0.5 ms, cut by ≥ 4 splits
+    val lines = (0 until 20000).map(i =>
+      f"(1700000000.$i%06d) can0 ${0x100 * (1 + i % 4)}%X#${i & 0xFFFF}%04X0000")
+    def logOf(ls: Seq[String]): String = {
+      val f = java.nio.file.Files.createTempDirectory("graft_plan_split").resolve("a.log")
+      java.nio.file.Files.write(f, ls.asJava)
+      f.toString
+    }
+    val cfg = graft.can.CanPipelineConfig(cacheMs = 0.5, forwardFill = true)
+    var df: DataFrame = null
+    def write(path: String): Unit = {
+      df = graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", path, cfg)
+      df.write.format("noop").mode("overwrite").save()
+    }
+    val (stages, plans) = jobShape(write(logOf(lines)))
+    assert(df.count() == 40)
+    // t0's aggregate (2), the fold and its staged summaries (2), the write (1)
+    assert(stages <= 5, s"$stages stages:\n${plans.mkString("\n")}")
+    plans.foreach { p =>
+      assert(!p.contains("arg_last") && !p.contains("rangepartitioning"),
+        s"bucket aggregate or range exchange in the ordered job:\n$p")
+    }
+    val (_, fallback) = jobShape(write(logOf(lines.reverse)))
+    assert(df.count() == 40)
+    assert(fallback.exists(_.contains("arg_last")),
+      s"a reversed log must run the general plan:\n${fallback.mkString("\n")}")
   }
 
   test("ForwardFill scaladoc states the tie semantics of orderCol") {
