@@ -37,6 +37,16 @@ object CanPipeline {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The candump log(s) at `logPath` → the wide table, as
+    * [[fromSplitOrderedFrames]] builds it. Tumbling configs (`!exact`,
+    * `cacheMs > 0`, at most [[Bucketer.CodegenArgWidthLimit]] signals)
+    * run one Spark job inside this call — the fold's pass 1 over the
+    * whole input — so read errors surface here, and a caller that only
+    * filters, limits or drops the frame still pays one full scan. The
+    * in-repo callers (`cli.Main.writeBatch`, `Stress`'s decode-and-bucket
+    * case, perfbench's `CanBatch`) all write or scan the whole frame
+    * right away. Every other config returns a lazy frame.
+    */
   def decodeLog(spark: SparkSession, dbcPath: String, logPath: String,
       cfg: CanPipelineConfig = CanPipelineConfig()): DataFrame = {
     val net = DbcParser.parseFile(dbcPath, cfg.lenientDbc)
@@ -44,32 +54,65 @@ object CanPipeline {
     fromSplitOrderedFrames(net, frames, cfg)
   }
 
-  /** [[fromFrames]] for frames whose partitions hold the input in order,
-    * split by split, as [[CandumpParser.readLog]]'s do. Tumbling buckets
-    * (`!exact`, `cacheMs > 0`, at most [[Bucketer.CodegenArgWidthLimit]]
-    * signals) run [[SplitTumbling]] now, which folds each split in that
-    * order. When the bucket ids turn out to decrease somewhere, the result
-    * is [[fromFrames]]'s plan over the same frames, unobserved: that
-    * costs one more parse and decode of the input, and the frames are
-    * still counted once, by the fold. Any other config is [[fromFrames]].
+  /** [[fromFrames]] for frames whose partitions each hold a run of the
+    * input in order, as [[CandumpParser.readLog]]'s splits do. Tumbling
+    * buckets that [[tumbling]] sends to [[SplitTumbling]] run its pass 1
+    * now, which folds each split in that order. When the bucket ids turn
+    * out to decrease inside a split, or splits overlap in time, the
+    * result is [[fromFrames]]'s plan. The fold stops each split at its
+    * first decrease, so a log out of order wastes little of a pass; splits
+    * that are each in order but overlap in time waste one parse and
+    * decode of the input. The fold counts frames (`observeMetrics`) under
+    * a name of its own ([[PipelineMetrics.observePendingFrames]]), and
+    * only the ordered result delivers that count, with its rows, so a
+    * write reports every frame once on either path. Any other config is
+    * [[fromFrames]].
     */
   private[graft] def fromSplitOrderedFrames(net: Network, frames: DataFrame,
       cfg: CanPipelineConfig): DataFrame =
-    if (cfg.exact || cfg.cacheMs <= 0 ||
-        net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit)
+    if (tumbling(net, cfg, splitOrdered = true) != Some(Tumbling.SplitFold))
       fromFrames(net, frames, cfg)
     else {
       val wide = SignalDecoder.wideFrame(net,
-        withMetrics(frames, cfg, PipelineMetrics.observeFrames), cfg.typing,
+        withMetrics(frames, cfg, PipelineMetrics.observePendingFrames), cfg.typing,
         carryCols = cfg.exactKeys)
-      val result = SplitTumbling(wide, cfg.cacheMs, cfg.combine, cfg.forwardFill)
-        .getOrElse {
-          log.info("bucket ids decrease across the input's splits: " +
+      SplitTumbling(wide, cfg.cacheMs, cfg.combine, cfg.forwardFill) match {
+        case Some(result) => withMetrics(result, cfg, PipelineMetrics.observeRows)
+        case None =>
+          log.info("bucket ids decrease inside or across the input's splits: " +
             "running the general tumbling plan")
-          bucketed(net, frames, cfg)
-        }
-      withMetrics(result, cfg, PipelineMetrics.observeRows)
+          fromFrames(net, frames, cfg)
+      }
     }
+
+  /** How tumbling buckets are computed. */
+  private sealed trait Tumbling
+  private object Tumbling {
+    /** [[SplitTumbling]]: each input split folded in its order. */
+    case object SplitFold extends Tumbling
+    /** [[Bucketer.bucket]]'s arg-extremum hash aggregate. */
+    case object Aggregate extends Tumbling
+    /** [[Bucketer.tumblingFromFrames]]: the frame payloads aggregated,
+      * the winners decoded; its duplicate-ts ties break on the payload.
+      */
+    case object FrameLevel extends Tumbling
+  }
+
+  /** The one width rule for tumbling buckets, or `None` when `cfg` is not
+    * tumbling (`exact`, or `cacheMs <= 0`). Networks of at most
+    * [[Bucketer.CodegenArgWidthLimit]] signals fold split by split when
+    * the frames are `splitOrdered`, and run the aggregate otherwise;
+    * wider ones run the frame-level plan. ([[Bucketer.bucket]] keeps its
+    * own check for direct callers; it counts the same columns, since the
+    * CLI asks for carry columns only with `--exact`.)
+    */
+  private def tumbling(net: Network, cfg: CanPipelineConfig,
+      splitOrdered: Boolean): Option[Tumbling] =
+    if (cfg.exact || cfg.cacheMs <= 0) None
+    else if (net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit)
+      Some(Tumbling.FrameLevel)
+    else if (splitOrdered) Some(Tumbling.SplitFold)
+    else Some(Tumbling.Aggregate)
 
   /** T7: thread the observed frame/row counters through when asked. */
   private def withMetrics(df: DataFrame, cfg: CanPipelineConfig,
@@ -101,45 +144,39 @@ object CanPipeline {
   }
 
   /** frames(ts_ms, can_id, data) → bucketed wide table. */
-  def fromFrames(net: Network, frames: DataFrame, cfg: CanPipelineConfig): DataFrame =
-    withMetrics(
-      bucketed(net, withMetrics(frames, cfg, PipelineMetrics.observeFrames), cfg),
-      cfg, PipelineMetrics.observeRows)
-
-  /** The general plan: decode, bucket and fill, with no counters added. */
-  private def bucketed(net: Network, frames: DataFrame,
-      cfg: CanPipelineConfig): DataFrame = {
+  def fromFrames(net: Network, frames0: DataFrame, cfg: CanPipelineConfig): DataFrame = {
+    val frames = withMetrics(frames0, cfg, PipelineMetrics.observeFrames)
     val wide = SignalDecoder.wideFrame(net, frames, cfg.typing,
       carryCols = cfg.exactKeys)
-    if (cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.nonEmpty)
+    val result = if (cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.nonEmpty)
       // keyed: independent folds per key, forward-fill in-pass
       Bucketer.exactFold(wide, cfg.cacheMs, cfg.exactKeys, cfg.combine, cfg.forwardFill)
     else {
-      // the frame-level tumbling path has different (still deterministic)
-      // duplicate-ts tie semantics, so the width switch is logged
-      val frameLevel = !cfg.exact && cfg.cacheMs > 0 &&
-        net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit
-      if (frameLevel)
-        log.info(s"network has ${net.signalsInOrder.size} signals " +
-          s"(> ${Bucketer.CodegenArgWidthLimit}): selecting frame-level " +
-          "tumbling (payload-u64 tie-break on duplicate timestamps)")
-      val bucketed =
-        if (frameLevel)
+      val bucketed = tumbling(net, cfg, splitOrdered = false) match {
+        case Some(Tumbling.FrameLevel) =>
+          // the frame-level tumbling path has different (still
+          // deterministic) duplicate-ts tie semantics, so the width
+          // switch is logged
+          log.info(s"network has ${net.signalsInOrder.size} signals " +
+            s"(> ${Bucketer.CodegenArgWidthLimit}): selecting frame-level " +
+            "tumbling (payload-u64 tie-break on duplicate timestamps)")
           // fleet-width tumbling: aggregate the raw frame payload (4
           // columns at any network width, fully codegen, finer shuffle
           // key) and decode only the winning frames — see
           // Bucketer.tumblingFromFrames
           Bucketer.tumblingFromFrames(net, frames, cfg.cacheMs, cfg.combine,
             cfg.typing)
-        else Bucketer.bucket(wide,
+        case _ => Bucketer.bucket(wide,
           if (cfg.cacheMs <= 0) BucketMode.PerFrame
           else if (cfg.exact) BucketMode.Exact(cfg.cacheMs) // keyless: exactDistributed
           else BucketMode.Tumbling(cfg.cacheMs),
           cfg.combine)
+      }
       if (cfg.forwardFill)
         ForwardFill.distributed(bucketed, DbcColumns.TimeCol)
       else bucketed
     }
+    withMetrics(result, cfg, PipelineMetrics.observeRows)
   }
 }
 

@@ -25,6 +25,11 @@ object PipelineMetrics {
 
   val FramesMetric = "graft_frames"
   val RowsMetric = "graft_rows"
+  /** Frames counted by a pass that may be dropped, so [[Progress]]
+    * ignores the count; [[passOnFrames]] re-delivers it from a pass that
+    * is kept.
+    */
+  private[graft] val PendingFramesMetric = "graft_frames_pending"
 
   /** Frame counter kept only for the benchmark's traced exact job
     * (`perfbench/src/perfbench/CanBatch.scala`), which passes one to
@@ -57,6 +62,23 @@ object PipelineMetrics {
   def observeFrames(frames: DataFrame): DataFrame =
     frames.observe(FramesMetric, count(lit(1)).as("messages"))
 
+  /** [[observeFrames]] under [[PendingFramesMetric]]. */
+  private[graft] def observePendingFrames(frames: DataFrame): DataFrame =
+    frames.observe(PendingFramesMetric, count(lit(1)).as("messages"))
+
+  /** `df` delivering, as its frames counter, the count that
+    * [[observePendingFrames]] took in `counted`'s execution (`counted` has
+    * run); `df` itself if `counted` counted nothing.
+    */
+  private[graft] def passOnFrames(df: DataFrame, counted: DataFrame): DataFrame =
+    counted.queryExecution.observedMetrics.get(PendingFramesMetric) match {
+      case Some(r) =>
+        val n = r.getAs[Long]("messages")
+        // a literal, so every execution of `df` reports it, even over no rows
+        df.observe(FramesMetric, coalesce(max(lit(n)), lit(n)).as("messages"))
+      case None => df
+    }
+
   /** Count emitted wide rows (the reference's `rows`). */
   def observeRows(wide: DataFrame): DataFrame =
     wide.observe(RowsMetric, count(lit(1)).as("rows"))
@@ -64,8 +86,7 @@ object PipelineMetrics {
   /** Batch listener: accumulates totals and prints the reference-style
     * progress line after each action that delivers the rows counter, so
     * once per write. An execution that delivers only the frames counter
-    * (the pass 1 of [[SplitTumbling]] or of a range scan) adds to the
-    * packet total silently.
+    * (the pass 1 of a range scan) adds to the packet total silently.
     *
     * `sessionHint` scopes the [[newExactFramesCounter]] lookup from
     * construction onwards; without it the scope is learned from the first

@@ -23,18 +23,20 @@ import graft.plans.{ArgImproves, SplitScan}
   * (ts, value) extremum through [[graft.plans.ArgImproves.beats]] — the
   * test [[graft.plans.ArgExtremum]] runs, so NaN, ±0.0 and equal
   * timestamps resolve as in [[Bucketer.bucket]]. A split whose bucket ids
-  * ever decrease stops folding (it still drains its frames, so observed
-  * counters see every frame) and reports itself unordered.
+  * ever decrease stops reading there and reports itself unordered.
   *
-  * The driver then checks the order across split edges, skipping empty
-  * splits. When bucket ids never decrease over the whole input, every
-  * bucket is one run of consecutive frames, so the fold sees exactly the
-  * frame set the hash aggregate groups, and the result is the same; a
-  * run that straddles one or more split edges is merged into one row,
-  * emitted by its lowest split. Buckets come out in bucket order, and
-  * distinct buckets have distinct `Time_ms`, so the fill carry-ins are
-  * computed over the rows as they will be emitted, and the filled result
-  * equals [[ForwardFill.distributed]] over the aggregate row for row.
+  * The driver then puts the non-empty splits in order of their (first,
+  * last) bucket ids — the input's own order when it is ordered, and file
+  * by file for a directory whose files cover distinct time ranges but are
+  * listed out of time order — and checks that bucket ids never decrease
+  * across the edges of that order. If so, every bucket is one run of
+  * consecutive frames in it, so the fold sees exactly the frame set the
+  * hash aggregate groups, and the result is the same; a run that
+  * straddles one or more split edges is merged into one row, emitted by
+  * the run's first split. Buckets come out in bucket order, and distinct
+  * buckets have distinct `Time_ms`, so the fill carry-ins are computed
+  * over the rows as they will be emitted, and the filled result equals
+  * [[ForwardFill.distributed]] over the aggregate row for row.
   *
   * Pass 2 (the caller's action) drops or replaces the merged edge rows
   * and fills each split from its carry-in, one output partition per
@@ -64,8 +66,12 @@ private[graft] object SplitTumbling {
 
   /** `wide(ts_ms, col...)` read in split order → `(Time_ms, col...)`
     * tumbling buckets of `cacheMs`, filled when `forwardFill`, or `None`
-    * when bucket ids decrease somewhere in the input (or a ts is null or
-    * NaN). Runs pass 1 now; the returned frame persists nothing.
+    * when bucket ids decrease inside a split, the splits' bucket ranges
+    * overlap, or a ts is null or NaN. Runs pass 1 now, which reads an
+    * unordered split only up to its first decrease (so counters observed
+    * in `wide` may miss frames on `None`); the returned frame persists
+    * nothing, and delivers the frames count of
+    * [[PipelineMetrics.observePendingFrames]] in `wide`, if any.
     */
   def apply(wide: DataFrame, cacheMs: Double, policy: CombinePolicy,
       forwardFill: Boolean): Option[DataFrame] = {
@@ -87,12 +93,14 @@ private[graft] object SplitTumbling {
 
     if (summaries.exists(!_.ordered)) return None
     val live = summaries.indices.filter(summaries(_).first != null)
-    if (live.zip(live.drop(1)).exists { case (a, b) =>
+    // stable: an ordered input keeps its own split order
+    val order = live.sortBy(p => (summaries(p).first.bucket, summaries(p).last.bucket))
+    if (order.zip(order.drop(1)).exists { case (a, b) =>
         summaries(a).last.bucket > summaries(b).first.bucket }) return None
 
-    val fixes = edgeFixes(summaries, live, types, isMax, forwardFill)
+    val fixes = edgeFixes(summaries, order, types, isMax, forwardFill)
     val bc = spark.sparkContext.broadcast(fixes)
-    val rows = staged.mapPartitionsWithIndex { (p, it) =>
+    val fixed = staged.mapPartitionsWithIndex { (p, it) =>
       val fix = bc.value(p)
       var out = if (fix.dropFirst) it.drop(1) else it
       if (fix.last != null) {
@@ -119,14 +127,18 @@ private[graft] object SplitTumbling {
         }
       }
     }
-    Some(Shims.internalDataFrame(spark, rows, schema))
+    val rows =
+      if (order == live) fixed
+      else SplitScan.inOrder(fixed, order ++ summaries.indices.filterNot(order.toSet))
+    Some(PipelineMetrics.passOnFrames(Shims.internalDataFrame(spark, rows, schema), in))
   }
 
-  /** The driver's half: merge each run of splits that share an edge
-    * bucket into the run's lowest split, then walk the rows in emit order
-    * for each split's fill carry-in.
+  /** The driver's half over the non-empty splits in emit `order`: merge
+    * each run of splits that share an edge bucket into the run's first
+    * split, then walk the rows in emit order for each split's fill
+    * carry-in.
     */
-  private def edgeFixes(summaries: Array[Summary], live: Seq[Int],
+  private def edgeFixes(summaries: Array[Summary], order: Seq[Int],
       types: Array[DataType], isMax: Boolean, forwardFill: Boolean): Array[Fix] = {
     val n = summaries.length
     val dropFirst = new Array[Boolean](n)
@@ -136,7 +148,7 @@ private[graft] object SplitTumbling {
     var run: Edge = null
     var merged = false
     def close(): Unit = if (merged) lastRow(head) = run.timeMs +: run.values
-    live.foreach { p =>
+    order.foreach { p =>
       val s = summaries(p)
       if (run != null && run.bucket == s.first.bucket) {
         run = beats.merge(run, s.first)
@@ -147,20 +159,19 @@ private[graft] object SplitTumbling {
     }
     close()
 
-    val carry = new Array[Array[Any]](n)
+    // an empty split emits no row, so its carry-in is never read
+    val carry = Array.fill(n)(new Array[Any](types.length))
     if (forwardFill) {
       val acc = new Array[Any](types.length)
       def absorb(vals: Array[Any]): Unit =
         vals.indices.foreach(j => if (vals(j) != null) acc(j) = vals(j))
-      summaries.indices.foreach { p =>
+      order.foreach { p =>
         carry(p) = acc.clone()
         val s = summaries(p)
-        if (s.first != null) {
-          if (s.rows > 1 && !dropFirst(p)) absorb(s.first.values)
-          absorb(s.mid)
-          if (s.rows > 1 || !dropFirst(p))
-            absorb(if (lastRow(p) != null) lastRow(p).tail else s.last.values)
-        }
+        if (s.rows > 1 && !dropFirst(p)) absorb(s.first.values)
+        absorb(s.mid)
+        if (s.rows > 1 || !dropFirst(p))
+          absorb(if (lastRow(p) != null) lastRow(p).tail else s.last.values)
       }
     }
     Array.tabulate(n)(p => Fix(dropFirst(p), lastRow(p), carry(p)))
@@ -258,13 +269,10 @@ private[graft] object SplitTumbling {
       if (ordered && open) close(atEnd = true) else null
     }
 
-    /** Bucket ids decreased (or a ts is missing): stop folding, but drain
-      * the split so that counters observed below it see every frame.
-      */
+    /** Bucket ids decreased (or a ts is missing): stop reading. */
     private def unordered(): Unit = {
       ordered = false
       open = false
-      while (it.hasNext) it.next()
     }
 
     private def close(atEnd: Boolean): InternalRow = {

@@ -3,7 +3,8 @@ package graft.plans
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD, ShuffledRDD}
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, PartitionPruningRDD, RDD,
+  ShuffledRDD}
 import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -68,5 +69,24 @@ object SplitScan {
       (PartitionPruningRDD.create(staged, _ < n).map(_._2.asInstanceOf[InternalRow]),
         summaries)
     }
+  }
+
+  /** `rdd`'s partitions in `order` (a permutation of their ids), each
+    * computed as it is: a narrow re-ordering, no shuffle.
+    */
+  def inOrder[T](rdd: RDD[T], order: Seq[Int]): RDD[T] = {
+    require(order.sorted == rdd.partitions.indices, s"not a permutation: $order")
+    val groups = order.toArray
+    rdd.coalesce(groups.length, shuffle = false, Some(new InOrder(groups)))
+  }
+
+  private final class InOrder(order: Array[Int]) extends PartitionCoalescer
+      with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] =
+      order.map { p =>
+        val g = new PartitionGroup()
+        g.partitions += parent.partitions(p)
+        g
+      }
   }
 }

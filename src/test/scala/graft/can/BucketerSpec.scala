@@ -157,12 +157,14 @@ class BucketerSpec extends AnyFunSuite {
     }
     val df = rows.toDF("Time_ms", "a", "b").repartition(7)
     val wexp = ForwardFill.windowed(df, "Time_ms").orderBy("Time_ms").collect()
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // ids, not a count: an earlier suite's persisted RDD may be cleaned
+    // up (ContextCleaner, on GC) while this test runs
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val distDf = ForwardFill.distributed(df, "Time_ms", numPartitions = 5)
     val dist = distDf.orderBy("Time_ms").collect()
     // contract: the result is lazy and distributed() persists nothing —
     // both passes read the range shuffle instead of a cached copy
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "distributed() must not persist its input or its result")
     assert(wexp.toSeq == dist.toSeq)
     // head rows before any value stay null

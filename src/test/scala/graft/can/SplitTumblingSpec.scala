@@ -79,8 +79,10 @@ class SplitTumblingSpec extends AnyFunSuite {
     * so its rows are compared as they come), and the split-order fold
     * runs or falls back as `ordered` says.
     */
-  private def check(name: String, splits: Seq[Seq[String]], ordered: Boolean): Unit = {
-    val fr = frames(splits)
+  private def check(name: String, splits: Seq[Seq[String]], ordered: Boolean): Unit =
+    checkFrames(name, frames(splits), ordered)
+
+  private def checkFrames(name: String, fr: DataFrame, ordered: Boolean): Unit = {
     val wide = SignalDecoder.wideFrame(net, fr)
     for (policy <- Seq(CombinePolicy.LastWins, CombinePolicy.FirstWins);
          fill <- Seq(true, false)) {
@@ -95,7 +97,7 @@ class SplitTumblingSpec extends AnyFunSuite {
         what)
       val rows = got.collect().toSeq
       if (ordered) {
-        assert(got.rdd.getNumPartitions == splits.size, what)
+        assert(got.rdd.getNumPartitions == fr.rdd.getNumPartitions, what)
         assert(rows == want, what)
       } else
         assert(rows.sortBy(_.getDouble(0)) == want, what)
@@ -169,9 +171,36 @@ class SplitTumblingSpec extends AnyFunSuite {
   test("a shuffled log takes the fallback and still equals the general plan") {
     val log = new scala.util.Random(5).shuffle(orderedLog(1500, 370, seed = 2))
     check("shuffled", cut(log, 4), ordered = false)
-    // ordered splits in the wrong order: every split is ordered, the
-    // edges between them are not
-    check("splits reversed", cut(orderedLog(1500, 370, seed = 4), 4).reverse,
-      ordered = false)
+    // two ordered splits over one time range, as two interfaces' logs:
+    // every split is ordered, but their buckets interleave
+    val both = orderedLog(1500, 370, seed = 3)
+    check("overlapping splits", Seq(both.indices.filter(_ % 2 == 0).map(both),
+      both.indices.filter(_ % 2 == 1).map(both)), ordered = false)
+  }
+
+  test("ordered splits out of order are emitted in time order") {
+    // each split is ordered and covers its own time range; bucket runs
+    // still straddle the edges between the time-ordered splits
+    val splits = cut(orderedLog(1500, 370, seed = 4), 4)
+    check("splits reversed", splits.reverse, ordered = true)
+    check("splits permuted", Seq(splits(2), Seq.empty, splits(0), splits(3),
+      splits(1)), ordered = true)
+  }
+
+  test("a directory of logs, named against their time order, takes the ordered path") {
+    val dir = java.nio.file.Files.createTempDirectory("split_tumbling")
+    try {
+      val log = orderedLog(2400, 370, seed = 6)
+      // c.log holds the first frames, a.log the last
+      Seq("c", "b", "a").zip(cut(log, 3)).foreach { case (name, lines) =>
+        java.nio.file.Files.write(dir.resolve(s"$name.log"),
+          lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      }
+      checkFrames("directory", CandumpParser.readLog(spark, dir.toString,
+        adjustTimestamp = false), ordered = true)
+    } finally {
+      Option(dir.toFile.listFiles()).foreach(_.foreach(_.delete()))
+      dir.toFile.delete()
+    }
   }
 }
