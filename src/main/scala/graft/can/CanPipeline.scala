@@ -40,17 +40,26 @@ object CanPipeline {
   /** The candump log(s) at `logPath` → the wide table, as
     * [[fromSplitOrderedFrames]] builds it. Tumbling configs (`!exact`,
     * `cacheMs > 0`, at most [[Bucketer.CodegenArgWidthLimit]] signals)
-    * run one Spark job inside this call — the fold's pass 1 over the
-    * whole input — so read errors surface here, and a caller that only
-    * filters, limits or drops the frame still pays one full scan. The
-    * in-repo callers (`cli.Main.writeBatch`, `Stress`'s decode-and-bucket
-    * case, perfbench's `CanBatch`) all write or scan the whole frame
-    * right away. Every other config returns a lazy frame.
+    * run their Spark jobs over the whole input inside this call — the
+    * t0 minimum ([[CandumpParser.withTsMsEager]], unless
+    * `!adjustTimestamp`), then the fold's pass 1 — so read errors surface
+    * here, and a caller that only filters, limits or drops the frame
+    * still pays those scans. The in-repo callers (`cli.Main.writeBatch`,
+    * `Stress`'s decode-and-bucket case, perfbench's `CanBatch`) all write
+    * or scan the whole frame right away. Every other config returns a
+    * lazy frame.
     */
   def decodeLog(spark: SparkSession, dbcPath: String, logPath: String,
       cfg: CanPipelineConfig = CanPipelineConfig()): DataFrame = {
     val net = DbcParser.parseFile(dbcPath, cfg.lenientDbc)
-    val frames = CandumpParser.readLog(spark, logPath, cfg.adjustTimestamp)
+    val lines = CandumpParser.parseLines(CandumpParser.textLines(spark, logPath))
+    // the fold runs now anyway: t0 resolved once, before it, spares its
+    // pass and a fallback plan a re-read of the log each
+    val frames =
+      if (cfg.adjustTimestamp &&
+          tumbling(net, cfg, splitOrdered = true) == Some(Tumbling.SplitFold))
+        CandumpParser.withTsMsEager(lines)
+      else CandumpParser.withTsMs(lines, cfg.adjustTimestamp)
     fromSplitOrderedFrames(net, frames, cfg)
   }
 
