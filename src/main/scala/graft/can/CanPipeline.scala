@@ -53,8 +53,8 @@ object CanPipeline {
       cfg: CanPipelineConfig = CanPipelineConfig()): DataFrame = {
     val net = DbcParser.parseFile(dbcPath, cfg.lenientDbc)
     val lines = CandumpParser.parseLines(CandumpParser.textLines(spark, logPath))
-    // the fold runs now anyway: t0 resolved once, before it, spares its
-    // pass and a fallback plan a re-read of the log each
+    // the fold runs a job now anyway; resolving t0 first, once, keeps its
+    // pass and a fallback plan from each re-reading the log for t0
     val frames =
       if (cfg.adjustTimestamp &&
           tumbling(net, cfg, splitOrdered = true) == Some(Tumbling.SplitFold))
