@@ -1312,7 +1312,7 @@ object SparkEntry {
         Dedup.connectedComponents(pairs)
           .select(col("id").as("doc_id"), col("comp"))
           .orderBy("doc_id")
-      } finally pairs.unpersist() // components are checkpointed — safe now
+      } finally pairs.unpersist() // the labels read the rounds' shuffle files
     }),
 
     "qd_groups_composed" -> ((s, dir) => {
@@ -1327,7 +1327,7 @@ object SparkEntry {
         r.groups.select(col("id").as("doc_id"), col("comp"))
           .withColumn("n_pairs", lit(nPairs))
           .orderBy("doc_id")
-      } finally r.pairs.unpersist() // groups are checkpointed — safe now
+      } finally r.pairs.unpersist() // groups read the rounds' shuffle files
     }),
 
     "qd_comp_sizes" -> ((s, dir) => {
@@ -2089,12 +2089,14 @@ object SparkEntry {
       val r = Dedup.contaminationSafeSplit(
         t(s, dir, "documents"), "doc_id", col("text"))
       try {
-        // folds is evaluated THREE times without this (both sides of the
-        // purity-count join, then the gate output), and each evaluation
-        // re-runs the corpus ⋈ components rep-join — checkpoint it once
-        // (r22, guide §5 "caching is worth it when a DataFrame is reused";
-        // localCheckpoint also truncates the component-iteration lineage)
-        val folds = r.folds.localCheckpoint()
+        // folds is evaluated three times (both sides of the purity-count
+        // join, then the gate output), each a corpus-id scan joined to the
+        // component labels. At sf0.1 (local[4], interleaved runs) a lazy
+        // persist saved nothing (median 3.58 s against 3.58 s, 8 runs
+        // each) and a localCheckpoint about 0.3 s (3.29 s against 3.63 s,
+        // 4 runs each) for a block that is lost with its executor, so the
+        // gate caches nothing
+        val folds = r.folds
         val fa = folds.select(col("doc_id").as("doc_a"), col("fold").as("fold_a"))
         val fb = folds.select(col("doc_id").as("doc_b"), col("fold").as("fold_b"))
         val nCross = r.pairs.join(fa, "doc_a").join(fb, "doc_b")

@@ -1,8 +1,14 @@
 package graft.ops
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for the training-data pipeline: exact,
   * bag-of-words signature, MinHash+LSH banding, SimHash. All hash math is
@@ -65,12 +71,18 @@ object Dedup {
     * the b-side is EVERY row with its rank, and the pair condition
     * `a.id < b.id AND (b.rn <= cap OR a.rn = 1)` yields both edge
     * classes at once — all-pairs among the capped set when b is in-cap,
-    * and only the bucket minimum (rn 1) when b is over-cap. One
-    * row_number window (O(k log k) per bucket, its (band, bkey) hash
-    * partitioning reused by the join exchange), per-bucket join work
-    * O(cap·k), output O(cap² + k). Measured ~25% faster than the
-    * equivalent capped-join ∪ star-edges UNION, which evaluates the
-    * window subtree once per branch.
+    * and only the bucket minimum (rn 1) when b is over-cap. Per-bucket
+    * join work O(cap·k), output O(cap² + k). Measured ~25% faster than
+    * the equivalent capped-join ∪ star-edges UNION.
+    *
+    * The two sides do not share one window in the executed plan: Spark 4
+    * plans the a-side's `_rn <= cap` filter as a `WindowGroupLimit`
+    * (partial limit before the (band, bkey) exchange, final after it), so
+    * each side runs its own exchange and window, and the input `bands`
+    * (the minhash aggregation and the band keys) is evaluated once per
+    * side. Forcing one shared window (window group limit off) was not
+    * faster on the dedup benchmark corpus (local[4]: 1.54 s against
+    * 1.62 s, within run-to-run spread).
     */
   def bandedCandidates(bands: DataFrame, idCol: String, cap: Int,
       carry: Seq[String] = Nil,
@@ -278,10 +290,12 @@ object Dedup {
     val cands = bandedCandidates(bandKeys(sig, idCol, carry = Seq("nsh")),
       idCol, bandCap, carry = Seq("nsh"), capObs = capObs)
     // explode-join-aggregate verify, deliberately NOT [[withCommonCounts]]
-    // (measured r22): banded candidates are FEW by construction — the
-    // point of LSH — so both verify joins broadcast the candidate side
-    // and stream the cached shingle relation map-side with no corpus
-    // shuffle; the array form's collect_list aggregation would ADD one
+    // (measured r22): both verify joins are equi-joins with no corpus
+    // shuffle — in the executed plan the cached shingle relation is the
+    // broadcast (build) side and the banded candidates stream past it
+    // (broadcasting the candidate side instead was not faster on the
+    // dedup benchmark corpus, local[4]: 1.81 s against 1.62 s); the
+    // array form's collect_list aggregation would ADD a shuffle
     // (qd_jaccard_est 1.09 → 1.44 s isolated under it). The array form
     // wins only where the candidate×shingle product explodes — the
     // prefix-filter exact join (see prefixFilterFromShingles).
@@ -1023,11 +1037,22 @@ object Dedup {
     * each round, so a diameter-d chain converges in O(log d) rounds — a
     * 1000-vertex chain in ~11 rounds instead of 1000. LSH pair graphs are
     * dense (cliques + star edges ⇒ diameter ≤ ~4) and finish in 2-3.
-    * Scale shape: each round is two equi-joins + one hash aggregation on
-    * the PAIR graph (far smaller than the corpus); `localCheckpoint`
-    * truncates the growing lineage each round so plans stay flat — the
-    * standard Spark iterative-graph pattern. The driver holds only the
-    * per-round convergence count.
+    * Scale shape: the rounds run on RDDs over the PAIR graph (far smaller
+    * than the corpus), all keyed under one hash partitioner, so the
+    * adjacency lists, the labels and the previous round's labels join
+    * without a shuffle. A round is three shuffles — the hop's
+    * min-reduction, the jump's request and its answer — each of plain
+    * (long, long) records, which Spark serializes with Kryo, and ONE
+    * Spark job, the round's changed count; no SQL query is planned per
+    * round. Nothing is persisted or checkpointed:
+    * each round and the returned labels read the previous round's
+    * shuffle files, so a lost block is recomputed from lineage. The
+    * partition count is what AQE would coalesce the rounds to (the edge
+    * relation's estimated bytes over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, at most
+    * `spark.sql.shuffle.partitions`), so a small graph's labels are one
+    * partition. The driver holds only the per-round convergence count.
+    * A pair with a null end is not an edge.
     *
     * If the bound is hit with labels still changing the result is
     * under-merged — silently wrong for dedup — so by default this THROWS
@@ -1053,37 +1078,37 @@ object Dedup {
     */
   def connectedComponentsWithStats(pairs: DataFrame, maxIter: Int = 20,
       failOnUnconverged: Boolean = true): CcResult = {
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+    val spark = pairs.sparkSession
+    val ends = pairs.where(col("doc_a").isNotNull && col("doc_b").isNotNull)
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+    val part = new HashPartitioner(ccPartitions(ends))
+    // adjacency lists: the edges in both directions, distinct, keyed by
+    // source vertex
+    val adj = ends.queryExecution.toRdd
+      .flatMap { r =>
+        val a = r.getLong(0)
+        val b = r.getLong(1)
+        Iterator((a, b), (b, a))
+      }
+      .groupByKey(part)
+      .mapValues(_.toArray.distinct)
+    var labels: RDD[(Long, Long)] =
+      adj.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("comp").as("dcomp")), "dst")
-        .groupBy(col("src").as("id")).agg(min("dcomp").as("ncomp"))
-      // checkpointed so the pointer jump's self-join reads one computed
-      // relation instead of evaluating the hop subtree twice; the round's
-      // starting label rides along as _old so convergence detection is a
-      // filter+count on the checkpointed round output itself — no extra
-      // per-round join against the previous labels
-      val hop = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("comp").as("_old"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      val next = hop
-        .join(hop.select(col("id").as("comp"), col("comp").as("ccomp")),
-          Seq("comp"), "left")
-        .select(col("id"), col("_old"),
-          least(col("comp"), coalesce(col("ccomp"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      changed = next.filter(col("comp") =!= col("_old")).count()
-      labels = next.select(col("id"), col("comp"))
+      // hop: every vertex takes the min of its own and its neighbours' labels
+      val hop = adj.join(labels, part)
+        .flatMap { case (v, (nbrs, c)) => Iterator.single((v, c)) ++ nbrs.iterator.map((_, c)) }
+        .reduceByKey(part, math.min(_, _))
+      // pointer jump: each vertex asks the vertex named by its hop label
+      // for that vertex's own hop label; the answer goes back to the asker
+      val next = hop.map(_.swap).partitionBy(part)
+        .leftOuterJoin(hop, part)
+        .map { case (h, (v, hh)) => (v, hh.fold(h)(math.min(h, _))) }
+        .partitionBy(part)
+      changed = next.join(labels, part).filter { case (_, (c, old)) => c != old }.count()
+      labels = next
       i += 1
     }
     if (changed > 0) {
@@ -1093,7 +1118,21 @@ object Dedup {
         s"$msg (pass failOnUnconverged = false to accept a partial merge)")
       System.err.println(s"[graft] $msg")
     }
-    CcResult(labels, i, changed == 0)
+    val rows = labels.mapPartitions(_.map { case (v, c) => InternalRow(v, c) })
+    CcResult(Shims.internalDataFrame(spark, rows, LabelSchema), i, changed == 0)
+  }
+
+  private val LabelSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("comp", LongType, nullable = false)))
+
+  /** The rounds' partition count (see [[connectedComponents]]). */
+  private def ccPartitions(ends: DataFrame): Int = {
+    val conf = ends.sparkSession.sessionState.conf
+    val bytes = ends.queryExecution.optimizedPlan.stats.sizeInBytes * 2
+    val advisory = math.max(1L, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    ((bytes + advisory - 1) / advisory)
+      .min(BigInt(conf.defaultNumShufflePartitions)).max(BigInt(1)).toInt
   }
 
   /** Verified pairs AND their transitive dedup groups from ONE pair
@@ -1103,7 +1142,8 @@ object Dedup {
     * DataFrame costs one shingle pass and one LSH join total — running
     * the two entry points separately rebuilds the whole minhash pipeline
     * twice. The caller owns the persisted `pairs` (unpersist when done);
-    * `groups` is fully materialized (localCheckpoint) before return.
+    * the component rounds have run before return, and `groups` reads
+    * their shuffle files — it stays valid after `pairs` is unpersisted.
     */
   final case class NearDupResult(pairs: DataFrame, groups: DataFrame)
 
@@ -1147,8 +1187,8 @@ object Dedup {
     * Same ownership contract as [[NearDupResult]]: the caller unpersists
     * `pairs` (kept so callers can audit purity — count pairs whose ends
     * disagree on fold — without rebuilding the minhash pipeline);
-    * `folds` is (idCol, rep, fold) with lineage over the checkpointed
-    * component labels.
+    * `folds` is (idCol, rep, fold) over the component labels, which read
+    * the component rounds' shuffle files.
     */
   final case class SafeSplitResult(folds: DataFrame, pairs: DataFrame)
 
@@ -1898,7 +1938,7 @@ object Dedup {
       Seq(idCol), "left_semi")
 
     val pairs = minhashNearDups(s2, idCol, col("_text"), threshold)
-    val comps = connectedComponents(pairs) // (id, comp), checkpointed
+    val comps = connectedComponents(pairs) // (id, comp), rounds already run
     pairs.unpersist()
     val ck = comps.groupBy("comp").agg(min(col("id")).as("keeper"))
     val nearDrop = comps.join(ck, "comp")

@@ -149,10 +149,11 @@ object Ranking {
     * (degree-annotated, persisted) edge list + one hash aggregation on
     * `dst` + one left join back to the node set — the standard
     * distributed PR round, no windows, no driver state beyond the loop
-    * counter. Per-round `localCheckpoint` truncates lineage like
-    * [[Dedup.connectedComponents]]. Dangling mass is dropped (nodes
-    * with no out-edges contribute nothing), the usual simplification —
-    * documented, and replayed identically by the oracle.
+    * counter. Per-round `localCheckpoint` truncates lineage, so a lost
+    * block fails the query instead of recomputing. Dangling mass is
+    * dropped (nodes with no out-edges contribute nothing), the usual
+    * simplification — documented, and replayed identically by the
+    * oracle.
     *
     * Output: (`node`, `pr`), every node present.
     */

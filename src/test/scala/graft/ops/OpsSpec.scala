@@ -208,6 +208,30 @@ class OpsSpec extends AnyFunSuite {
     } finally res.pairs.unpersist()
   }
 
+  test("nearDupGroups: groups survive the loss of every block the call persisted") {
+    // a lost executor takes its cached and locally checkpointed blocks
+    // with it; the groups must recompute from lineage, not fail with
+    // "Checkpoint block ... not found"
+    val boiler = "the same boilerplate text repeated across mirrors again and again"
+    val corpus = ((1L to 6L).map(i => (i, boiler)) ++
+      Seq((7L, "an entirely different document about gardens and rivers flowing"),
+          (8L, "quantum chemistry lecture notes with equations and derivations")))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    // ids, not all of them: an earlier suite's persisted RDDs are not
+    // this call's to drop
+    val before = sc.getPersistentRDDs.keySet
+    val res = Dedup.nearDupGroups(corpus, "doc_id", col("text"))
+    try {
+      val persisted = sc.getPersistentRDDs.keySet -- before
+      assert(persisted.nonEmpty) // the pairs cache, at least
+      persisted.foreach(id =>
+        org.apache.spark.SparkEnv.get.blockManager.master.removeRdd(id, blocking = true))
+      val groups = res.groups.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(groups == (1L to 6L).map(_ -> 1L).toMap)
+    } finally res.pairs.unpersist()
+  }
+
   test("simhash: identical texts equal, near texts close in hamming") {
     val sims = Dedup.simhash(docs, "doc_id", col("text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -610,13 +610,18 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  /** Stages run and executed plans of the SQL executions reported while
-    * `body` runs.
+  /** Jobs and stages run, and executed plans of the SQL executions
+    * reported, while `body` runs.
     */
-  private def jobShape(body: => Unit): (Int, Seq[String]) = {
+  private case class JobShape(jobs: Int, stages: Int, plans: Seq[String])
+  private def jobShape(body: => Unit): JobShape = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
     val stageListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet(); ()
@@ -639,7 +644,36 @@ class PlanSpec extends AnyFunSuite {
       sc.removeSparkListener(stageListener)
       spark.listenerManager.unregister(planListener)
     }
-    (stages.get, plans.asScala.toSeq)
+    JobShape(jobs.get, stages.get, plans.asScala.toSeq)
+  }
+
+  test("connectedComponents: one job per round, nothing persisted or locally " +
+      "checkpointed, a tiny graph's labels in one partition") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L), (12L, 11L))
+      .toDF("doc_a", "doc_b")
+    // ids, not a count: an earlier suite's persisted RDD may be cleaned
+    // up (ContextCleaner, on GC) while this test runs
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    var res: Dedup.CcResult = null
+    var labels = Map.empty[Long, Long]
+    val shape = jobShape {
+      res = Dedup.connectedComponentsWithStats(pairs)
+      labels = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L))
+    // the rounds' changed counts, the collect, and no other job
+    assert(shape.jobs <= res.rounds + 2, s"${shape.jobs} jobs for ${res.rounds} rounds")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- rdds).isEmpty)
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Iterator[org.apache.spark.rdd.RDD[_]] =
+      if (!seen.add(r.id)) Iterator.empty
+      else Iterator.single(r) ++ r.dependencies.iterator.flatMap(d => lineage(d.rdd))
+    val out = res.labels.queryExecution.toRdd
+    assert(!lineage(out).exists(_.getClass.getSimpleName == "LocalCheckpointRDD"),
+      s"locally checkpointed block in the labels' lineage:\n${out.toDebugString}")
+    // one partition is one output file for the bench-sized groups
+    assert(out.getNumPartitions == 1)
   }
 
   test("CAN --file tumbling + fill on a time-ordered log: split-order fold " +
@@ -660,7 +694,7 @@ class PlanSpec extends AnyFunSuite {
       df = graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", path, cfg)
       df.write.format("noop").mode("overwrite").save()
     }
-    val (stages, plans) = jobShape(write(logOf(lines)))
+    val JobShape(_, stages, plans) = jobShape(write(logOf(lines)))
     assert(df.count() == 40)
     // t0's aggregate (2), the fold and its staged summaries (2), the write (1)
     assert(stages <= 5, s"$stages stages:\n${plans.mkString("\n")}")
@@ -668,7 +702,7 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("arg_last") && !p.contains("rangepartitioning"),
         s"bucket aggregate or range exchange in the ordered job:\n$p")
     }
-    val (_, fallback) = jobShape(write(logOf(lines.reverse)))
+    val JobShape(_, _, fallback) = jobShape(write(logOf(lines.reverse)))
     assert(df.count() == 40)
     assert(fallback.exists(_.contains("arg_last")),
       s"a reversed log must run the general plan:\n${fallback.mkString("\n")}")

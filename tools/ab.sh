@@ -10,11 +10,13 @@
 # from /proc/stat (column 8 of the `cpu` line) before and after each run.
 # Each run's JSON result, with its side, seed and steal, is appended to
 # $AB_OUT (default: the temporary directory's name + .jsonl). The summary
-# gives per metric each side's median and IQR, and the pairs b won.
+# gives per metric each side's median and IQR, and the pairs b won, over
+# the pairs whose two runs are both correct with 0 failed; it names the
+# pairs it dropped.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-[ $# -ge 2 ] || { sed -n '2,13p' "$0"; exit 2; }
+[ $# -ge 2 ] || { sed -n '2,15p' "$0"; exit 2; }
 REF_A=$1 REF_B=$2 PAIRS=${3:-10} WORKLOAD=${4:-can_tumble_ffill_wide} SECONDS_=${5:-6}
 SEED0=${6:-1}
 
@@ -80,10 +82,17 @@ for s in "ab":
     print(f"{s}: {len(rs) - len(bad)}/{len(rs)} runs correct with 0 failed"
           f"{' (not: pairs ' + str(bad) + ')' if bad else ''}; "
           f"steal % median {statistics.median(st):.2f}, max {max(st):.2f}")
+# an incorrect or failing run's time is not a time of the workload: the
+# medians and wins compare only pairs whose two runs are both good
+good = lambda r: r.get("correct") is True and r.get("failed") == 0
+dropped = [p for p in pairs if not (good(side["a"][p]) and good(side["b"][p]))]
+if dropped:
+    print(f"dropped pairs {dropped}: a run was not correct with 0 failed")
 print(f"{'metric':24} {'a median':>12} {'a IQR':>10} {'b median':>12} {'b IQR':>10} "
       f"{'b/a':>7} {'b wins':>7}")
 for m, sign in better.items():
-    ok = [p for p in pairs if m in side["a"][p]["metrics"] and m in side["b"][p]["metrics"]]
+    ok = [p for p in pairs if p not in dropped
+          and m in side["a"][p]["metrics"] and m in side["b"][p]["metrics"]]
     if not ok:
         continue
     # run.py reports each metric as {"value": v, "unit": u}
