@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Sessions are tuned the way a
   * production deployment would be at this core count: shuffle partitions =
@@ -33,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   *     family (3-4× on four code-identical gates). Per-slice JVMs bound
   *     that contamination while keeping session bring-up untimed (each
   *     child warms up before timing).
-  *     `SPARK_GRAFT_BENCH_ONLY` (diagnostics) and
+  *     A `SPARK_GRAFT_BENCH_ONLY` subset (diagnostics) and
   *     `SPARK_GRAFT_BENCH_FORK=0` both run single-JVM, unchanged;
   *   - the JSON line goes to stdout AND to a bare file (bench_out.json, or
   *     $SPARK_GRAFT_BENCH_OUT) so log-prefix wrapping (sbt's "[info] ")
@@ -82,28 +80,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // a filter var that names NO queries ("", ",", " , ") must mean "run
-    // all", not Some(emptySet): the latter passes the unknown-name check
-    // vacuously and would emit a zero-query board whose total 0.000 reads
-    // as an enormous speedup — so guard on the RESULTING set, not the raw
-    // string (same guard as Verify's query-name argument)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    // a mistyped filter name must fail loudly, not write an empty (or
-    // silently smaller) results board
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names match no registered query: " +
-          s"${unknown.toSeq.sorted.mkString(", ")} (known: " +
-          s"${SparkEntry.queries.keySet.toSeq.sorted.take(5).mkString(", ")}, ...)")
-    }
-    val forkFamilies =
-      only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
+    // a filter that names no query means the full board: a zero-query
+    // board would read its total 0.000 as an enormous speedup, and a
+    // mistyped name fails loudly (SparkEntry.select)
+    val names = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ""))
+    val forkFamilies = names.size == SparkEntry.queries.size &&
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
     val results: Seq[(String, Option[Double])] =
       if (forkFamilies) runFamiliesInChildJvms(sfDir)
-      else runInProcess(sfDir, only)
+      else runInProcess(sfDir, names)
     // millisecond precision: sub-ms digits are pure noise at these run
     // times, and the shorter line survives tail-window log captures that
     // truncated a full-precision round-5 line mid-JSON. Locale.ROOT keeps
@@ -251,29 +236,15 @@ object Bench {
     * SparkSession, warmup untimed, min-of-5 per query.
     */
   private def runInProcess(
-      sfDir: String, only: Option[Set[String]]): Seq[(String, Option[Double])] = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.staticTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+      sfDir: String, names: Seq[String]): Seq[(String, Option[Double])] = {
+    val spark = GraftSession.local(GraftSession.envCpus)
     // untimed warmup: initialize parquet reader, shuffle machinery, and JIT
     // the common execution paths so the first timed query isn't charged
     // session bring-up
     spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().collect()
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = names.map { name =>
+      val fn = SparkEntry.queries(name)
       val times = (1 to Reps).map { _ =>
         val t0 = System.nanoTime()
         // a failed rep must NOT win the min (an exception returns in
@@ -290,11 +261,7 @@ object Bench {
             false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        // drop lingering per-query caches so later runs aren't charged
-        // earlier runs' memory pressure; localCheckpoint blocks are
-        // RDD-level (not in the catalog cache manager), release them too
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        GraftSession.release(spark)
         if (ok) Some(sec) else None
       }
       // min over successful reps only; a query whose reps ALL failed

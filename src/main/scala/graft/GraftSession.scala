@@ -2,7 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level tuning every graft entry point applies. */
+/** Session-level tuning every graft entry point applies.
+  *
+  * Static (build-time) confs take effect only on the session that creates
+  * the JVM's SparkContext: a `getOrCreate` that reuses an existing
+  * session silently keeps that session's shuffle writer selection. The
+  * harness mains (Bench, Verify, Stress, PlanDump, Probe) and the test
+  * suites therefore build through [[local]]; the CLI and perfbench build
+  * their own sessions and call [[staticTuning]] and [[tune]].
+  */
 object GraftSession {
 
   /** Spark fuses a stage into whole-stage codegen only while the widest
@@ -69,13 +77,6 @@ object GraftSession {
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_BYPASS_MERGE must be a nonnegative integer, got '$v'"))
 
-  /** NOTE: static (build-time) confs take effect only on the session that
-    * creates the JVM's SparkContext — a `getOrCreate` that reuses an
-    * existing session silently keeps that session's shuffle writer
-    * selection. Entry points that must guarantee the floor should build
-    * the session themselves (the CLI, Bench, Verify and Stress all do).
-    */
-
   /** Build-time (static) conf shared by every graft-created session:
     * see [[BypassMergeThreshold]].
     */
@@ -95,5 +96,40 @@ object GraftSession {
     // documented contracts.
     spark.conf.set("spark.sql.ansi.enabled", "true")
     spark
+  }
+
+  /** The one local session the harness mains and the test suites run on:
+    * `local[cpus]`, shuffle partitions = cpus, UTC, AQE on, UI off, and
+    * small `maxPartitionBytes`/`openCostInBytes` so single-file local
+    * inputs still fan out across all cores (a 5 MB bench file must not
+    * serialize a whole scan onto one task). Then [[staticTuning]],
+    * [[tune]] and WARN logging.
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = staticTuning(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "1m")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    tune(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The harness mains' core count: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** Releases what a query build persisted, between queries or reps: the
+    * catalog cache and every persisted RDD (`localCheckpoint` blocks are
+    * RDD-level, not in the catalog cache manager), so later queries are
+    * not charged earlier ones' storage memory.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 }

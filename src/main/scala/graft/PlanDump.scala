@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: writes `.explain("formatted")` for named registered
   * queries to files — the plan evidence the optimization rounds commit
   * under `plans/rN/`. Not a query and not benched; it shares the bench
@@ -13,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=...
   *   runMain graft.PlanDump <outDir> <suffix> <query>[,<query>...]
+  *
+  * A list that names no query (e.g. "" or ",") dumps every registered
+  * query (`SparkEntry.select`).
   *
   * Writes <outDir>/<query>_<suffix>.txt. Queries whose construction
   * executes eagerly (persist-and-materialize contracts) run that work;
@@ -23,21 +24,8 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...>")
     val Array(outDir, suffix, namesArg) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val names = namesArg.split(",").map(_.trim).filter(_.nonEmpty)
-    val unknown = names.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = GraftSession.staticTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.select(namesArg)
+    val spark = GraftSession.local(GraftSession.envCpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -45,9 +33,7 @@ object PlanDump {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
         plan.getBytes(StandardCharsets.UTF_8))
-      // release whatever the construction persisted (operator contracts)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
       System.err.println(s"[plandump] $name -> ${name}_$suffix.txt")
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (not a query, not benched): runs named registered
   * queries under the bench session shape with a SparkListener attached and
@@ -14,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=...
   *   runMain graft.Probe <query>[,<query>...] [reps]
+  *
+  * A list that names no query (e.g. "" or ",") probes every registered
+  * query (`SparkEntry.select`); reps defaults to 2.
   */
 object Probe {
   private class StageStats {
@@ -27,23 +29,11 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Probe <q1,q2,...> [reps]")
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = SparkEntry.select(args(0))
     val reps = if (args.length > 1) args(1).toInt else 2
-    val unknown = names.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    require(reps >= 1, s"reps must be at least 1, got $reps")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.staticTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     // same untimed warmup as Bench
     spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().collect()
@@ -104,8 +94,7 @@ object Probe {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        GraftSession.release(spark)
         // listenerBus is private[spark]; a short sleep drains the queue
         // well enough for a diagnostic table
         Thread.sleep(300)

@@ -46,29 +46,12 @@ object SparkEntry {
     * tables are each ONE parquet row group, so byte-range splitting
     * yields empty tasks plus one task holding every row — lineitem's 11
     * "splits" are 10 empties + 600k rows). Same scale-adaptive trigger:
-    * a real many-split scan takes the `else` branch untouched.
+    * a real many-split scan takes the `else` branch untouched. Reading
+    * the split count plans the scan once per build.
     */
-  /** Memoized fan-out decisions: `df.rdd.getNumPartitions` forces a full
-    * physical-planning + RDD-conversion pass of the scan purely to read
-    * the split count — paid once per query BUILD (~13 builders × every
-    * bench rep) without this. The decision is planning METADATA (file
-    * layout × session split config), not a query result: it is keyed by
-    * the scan's resolved input files and the session's parallelism, both
-    * fixed for a given (session, table) — the same lifetime Spark's own
-    * file-listing cache has.
-    */
-  private val fanDecisions =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   private def fannedScan(s: SparkSession, df: DataFrame): DataFrame = {
     val p = s.sparkContext.defaultParallelism
-    val files = df.inputFiles
-    val under =
-      if (files.isEmpty) df.rdd.getNumPartitions < p // non-file plan: no stable key
-      else fanDecisions.computeIfAbsent(
-        s"${System.identityHashCode(s)}:$p:${files.sorted.mkString(",")}",
-        _ => df.rdd.getNumPartitions < p).booleanValue()
-    if (under) df.repartition(p) else df
+    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
   /** events.ts has shipped under two physical parquet encodings across
@@ -433,8 +416,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q2_revenue_by_nation")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** The registered query names a comma-separated list selects, sorted.
+    * A list that names nothing ("", ",", " , ") selects every query:
+    * taken literally it would select none, and a run with zero coverage
+    * would look clean. Unknown names fail, listing them.
+    */
+  def select(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    (if (names.isEmpty) queries.keySet else names).toSeq.sorted
+  }
+
+  /** One entry per implemented operator from SURVEY.md §2. Every value is
+    * a function literal, so building the map reads no other member. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
 
     // --- relational core (SURVEY §2.4 "query side": Spark built-ins) ---
@@ -961,8 +958,6 @@ object SparkEntry {
     */
   private[graft] def zipfDocs(s: SparkSession, dir: String): DataFrame = {
     import TextAnalysis.md5Long
-    def letters(c: Column): Column =
-      translate(c.cast("string"), "0123456789", "abcdefghij")
     val base = t(s, dir, "documents").select(
       col("doc_id"),
       when(col("doc_id") % 10 === 1, col("doc_id") - 1)
@@ -990,15 +985,28 @@ object SparkEntry {
       // rep still computes from the parquet input.
       .localCheckpoint()
     base.select(col("doc_id"),
-      concat_ws(" ", transform(sequence(lit(1L), col("_len")), tk => {
-        val salt = concat(col("_b").cast("string"), lit("_"), tk.cast("string"))
-        val tier = md5Long(salt) % 100L
-        val hw = md5Long(concat(salt, lit("_w")))
-        when(col("_tw") && (tk === col("_len")), lit("twinmark"))
-          .when(tier < 20, concat(lit("a"), letters(hw % 10)))
-          .when(tier < 50, concat(lit("b"), letters(hw % 300)))
-          .otherwise(concat(lit("c"), letters(hw % 30000)))
-      })).as("text"))
+      zipfText(col("_b"), col("_tw"), col("_len"), 30000).as("text"))
+  }
+
+  /** The text of a [[zipfDocs]]-style document from its seed columns:
+    * `len` words salted by `b` (the doc itself, or the original a twin
+    * copies), drawn from 10 very-common, 300 mid and `rareTypes` rare
+    * types, letters only; a `twin` doc's last word is the marker.
+    */
+  private[graft] def zipfText(b: Column, twin: Column, len: Column,
+      rareTypes: Long): Column = {
+    import TextAnalysis.md5Long
+    def letters(c: Column): Column =
+      translate(c.cast("string"), "0123456789", "abcdefghij")
+    concat_ws(" ", transform(sequence(lit(1L), len), tk => {
+      val salt = concat(b.cast("string"), lit("_"), tk.cast("string"))
+      val tier = md5Long(salt) % 100L
+      val hw = md5Long(concat(salt, lit("_w")))
+      when(twin && (tk === len), lit("twinmark"))
+        .when(tier < 20, concat(lit("a"), letters(hw % 10)))
+        .when(tier < 50, concat(lit("b"), letters(hw % 300)))
+        .otherwise(concat(lit("c"), letters(hw % rareTypes)))
+    }))
   }
 
   /** Probe query for the BM25 gate — terms with spread document

@@ -46,18 +46,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "STRESS.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.staticTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().collect() // session warmup, untimed
 
@@ -153,8 +142,7 @@ object Stress {
       val t0 = System.nanoTime()
       body
       val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
       sec
     }.min
 
@@ -384,24 +372,14 @@ object Stress {
     * SparkEntry.zipfDocs, generated from spark.range so the word space
     * can scale.
     */
-  private def zipfCorpus(spark: SparkSession, copies: Int): DataFrame = {
+  private[graft] def zipfCorpus(spark: SparkSession, copies: Int): DataFrame = {
     import graft.ops.TextAnalysis.md5Long
-    def letters(cl: org.apache.spark.sql.Column) =
-      translate(cl.cast("string"), "0123456789", "abcdefghij")
     spark.range(5000L * copies).select(col("id").as("doc_id"))
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("_len", lit(30L) +
         md5Long(concat(col("doc_id").cast("string"), lit("_len"))) % 41L)
-      .select(col("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1L), col("_len")), t => {
-          val salt = concat(col("doc_id").cast("string"), lit("_"),
-            t.cast("string"))
-          val tier = md5Long(salt) % 100L
-          val hw = md5Long(concat(salt, lit("_w")))
-          when(tier < 20, concat(lit("a"), letters(hw % 10)))
-            .when(tier < 50, concat(lit("b"), letters(hw % 300)))
-            .otherwise(concat(lit("c"), letters(hw % (30000L * copies))))
-        })).as("text"))
+      .select(col("doc_id"), SparkEntry.zipfText(col("doc_id"), lit(false),
+        col("_len"), 30000L * copies).as("text"))
   }
 
   /** SparkEntry.zipfDocs' construction (3-tier mixture, planted twins at
@@ -414,10 +392,8 @@ object Stress {
     * double axis). This corpus is the non-degenerate middle: fresh docs,
     * fresh twins (~10% of docs), stable type space.
     */
-  private def zipfTwinCorpus(spark: SparkSession, copies: Int): DataFrame = {
+  private[graft] def zipfTwinCorpus(spark: SparkSession, copies: Int): DataFrame = {
     import graft.ops.TextAnalysis.md5Long
-    def letters(cl: org.apache.spark.sql.Column) =
-      translate(cl.cast("string"), "0123456789", "abcdefghij")
     spark.range(5000L * copies).select(col("id").as("doc_id"))
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"),
@@ -427,16 +403,7 @@ object Stress {
       .withColumn("_len", lit(30L) +
         md5Long(concat(col("_b").cast("string"), lit("_len"))) % 41L)
       .select(col("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1L), col("_len")), tk => {
-          val salt = concat(col("_b").cast("string"), lit("_"),
-            tk.cast("string"))
-          val tier = md5Long(salt) % 100L
-          val hw = md5Long(concat(salt, lit("_w")))
-          when(col("_tw") && (tk === col("_len")), lit("twinmark"))
-            .when(tier < 20, concat(lit("a"), letters(hw % 10)))
-            .when(tier < 50, concat(lit("b"), letters(hw % 300)))
-            .otherwise(concat(lit("c"), letters(hw % 30000)))
-        })).as("text"))
+        SparkEntry.zipfText(col("_b"), col("_tw"), col("_len"), 30000L).as("text"))
   }
 
   /** The prefix join's scaling MEASURED on a realistic vocabulary
@@ -552,12 +519,6 @@ object Stress {
     try {
       noop(graft.can.CanPipeline.decodeLog(spark, "fixtures/mini.dbc", path,
         graft.can.CanPipelineConfig(cacheMs = 10.0)))
-    } finally {
-      // best-effort temp cleanup
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally rmTree(new java.io.File(dir))
   }
 }

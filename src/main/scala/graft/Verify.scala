@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,35 +6,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query names to run (driver omits
-    // it). A blank arg means "run all" (split("") would yield Set("") and
-    // silently run NOTHING — a clean-looking round with zero coverage);
-    // names that don't exist fail fast for the same reason.
-    // guard on the RESULTING set, not the raw string: "," or " , " would
-    // otherwise yield Some(emptySet) and silently run NOTHING
-    val only: Option[Set[String]] =
-      (if (args.length > 2 && args(2).trim.nonEmpty)
-        Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None).filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.staticTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    // it); see SparkEntry.select
+    val names = SparkEntry.select(if (args.length > 2) args(2) else "")
+    // the bench session shape: the oracle certifies the plans Bench times
+    val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -43,10 +21,7 @@ object Verify {
           s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
             .take(500)
       }
-      // release per-query caches/checkpoints so 50+ queries don't stack
-      // storage memory (library hygiene: consumed results are done here)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -15,9 +15,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   - `array_dot(a, b)`                          → [[ArrayDotProduct]]
   *   - `arg_last(v, ord)` / `arg_first(v, ord)`   → [[ArgExtremum]]
   *
-  * Activate with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Activate with `.withExtensions(new GraftExtensions)` on a session
+  * builder or `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -19,4 +19,15 @@ class SparkEntrySpec extends AnyFunSuite {
     val blank = SparkEntry.oracleSql.collect { case (k, v) if v.trim.isEmpty => k }
     assert(blank.isEmpty, s"blank oracle SQL for: ${blank.toSeq.sorted}")
   }
+
+  test("select: a list that names no query selects all 208; unknown names fail") {
+    val all = SparkEntry.queries.keySet.toSeq.sorted
+    assert(all.size == 208)
+    for (blank <- Seq("", ",", " , "))
+      assert(SparkEntry.select(blank) == all, s"'$blank'")
+    assert(SparkEntry.select(" q1_pricing_summary ,") == Seq("q1_pricing_summary"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select("q1_pricing_summary,nope"))
+    assert(e.getMessage.contains("unknown query name(s): nope"), e.getMessage)
+  }
 }

@@ -2,18 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks one test JVM). */
+/** One shared local session for all suites in a forked test JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.staticTuning(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    GraftSession.tune(s)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RankingSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("ranking-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .getOrCreate()
+  private lazy val spark = graft.SparkTestSession.spark
 
   test("bm25Scores matches an independently computed fixture") {
     import spark.implicits._
