@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{AsOfJoin, Dedup, RangeJoin, Similarity, TextAnalysis, Timeseries, UnigramLm}
+import graft.fixtures.{Tables, ZipfCorpus}
 
 /** Standing 10× scale-stress harness (the tagged-copy protocol the round
   * notes ran ad-hoc, promoted to a tool): the heaviest operator families
@@ -369,7 +370,7 @@ object Stress {
     * 30k·c) grow with `c` — the double axis the word-table-bounded claim
     * must survive (10× occurrences alone would leave the DP input
     * unchanged and measure nothing). Same construction as
-    * SparkEntry.zipfDocs, generated from spark.range so the word space
+    * ZipfCorpus.zipfDocs, generated from spark.range so the word space
     * can scale.
     */
   private[graft] def zipfCorpus(spark: SparkSession, copies: Int): DataFrame = {
@@ -378,11 +379,11 @@ object Stress {
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("_len", lit(30L) +
         md5Long(concat(col("doc_id").cast("string"), lit("_len"))) % 41L)
-      .select(col("doc_id"), SparkEntry.zipfText(col("doc_id"), lit(false),
+      .select(col("doc_id"), ZipfCorpus.zipfText(col("doc_id"), lit(false),
         col("_len"), 30000L * copies).as("text"))
   }
 
-  /** SparkEntry.zipfDocs' construction (3-tier mixture, planted twins at
+  /** ZipfCorpus.zipfDocs' construction (3-tier mixture, planted twins at
     * doc_id % 10 == 1, letters-only words) generated from spark.range so
     * the DOC axis scales, with the vocabulary FIXED at the realistic 30k
     * types — the production scaling axis: a crawl grows 10×, the language
@@ -403,7 +404,7 @@ object Stress {
       .withColumn("_len", lit(30L) +
         md5Long(concat(col("_b").cast("string"), lit("_len"))) % 41L)
       .select(col("doc_id"),
-        SparkEntry.zipfText(col("_b"), col("_tw"), col("_len"), 30000L).as("text"))
+        ZipfCorpus.zipfText(col("_b"), col("_tw"), col("_len"), 30000L).as("text"))
   }
 
   /** The prefix join's scaling MEASURED on a realistic vocabulary
@@ -456,7 +457,7 @@ object Stress {
 
   /** Events with ts as micros long; copies share user keys, ts +i µs. */
   private def eventCopies(spark: SparkSession, dir: String, copies: Int): DataFrame = {
-    val ev = SparkEntry.events(spark, dir)
+    val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), unix_micros(col("ts")).as("us"))
     if (copies == 1) ev

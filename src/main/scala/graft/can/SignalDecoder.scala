@@ -97,9 +97,6 @@ object SignalDecoder {
     else (raw.cast(DoubleType) * lit(sig.factor) + lit(sig.offset)).cast(target)
   }
 
-  def physExpr(sig: Signal, le: Column, be: Column, mode: TypingMode): Column =
-    physExprFrom(rawExpr(sig, le, be), sig, mode)
-
   /** Full per-signal column incl. message dispatch (P2) and mux gating (P5):
     * null unless `can_id` matches the signal's message (inner-join semantics
     * — unknown ids produce all-null signal cells and are filtered by F1

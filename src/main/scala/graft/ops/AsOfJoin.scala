@@ -55,15 +55,6 @@ object AsOfJoin {
     asof(left, right, key, ts, payload, strict, descending = false,
       prefix = "prev_", toleranceOpt = Some(tolerance))
 
-  /** Tolerance-bounded forward as-of — [[forward]] with a staleness bound
-    * in the other direction.
-    */
-  def forwardWithin(left: DataFrame, right: DataFrame, key: String,
-      ts: String, payload: Seq[String], tolerance: Long,
-      strict: Boolean = true): DataFrame =
-    asof(left, right, key, ts, payload, strict, descending = true,
-      prefix = "next_", toleranceOpt = Some(tolerance))
-
   /** Nearest as-of: for each left row, the right row minimizing |Δts|
     * among the same key's matches on EITHER side — the "closest sensor
     * reading" semantics ([[backward]] ∘ [[forward]], then a per-row

@@ -61,7 +61,7 @@ class EventsLoaderSpec extends AnyFunSuite {
   }
 
   private def load(dir: String): Seq[Row] =
-    SparkEntry.events(spark, dir)
+    fixtures.Tables.events(spark, dir)
       .withColumn("ts", unix_micros(col("ts")))
       .orderBy("event_id").collect().toSeq
 
@@ -70,7 +70,7 @@ class EventsLoaderSpec extends AnyFunSuite {
     val dirs = Seq("nanos-long", "micros-ntz", "micros-utc")
       .map(m => m -> writeFixture(m))
     dirs.foreach { case (m, d) =>
-      val dt = SparkEntry.events(spark, d).schema("ts").dataType
+      val dt = fixtures.Tables.events(spark, d).schema("ts").dataType
       // ts must land as TimestampType in every mode (downstream
       // unix_micros, window, and as-of joins all assume it)
       assert(dt == TimestampType, s"mode=$m read back as $dt")

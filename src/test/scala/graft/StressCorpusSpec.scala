@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the text of the Stress harness's generated corpora. No oracle
   * checks them, so a change to the generator they share with
-  * `SparkEntry.zipfDocs` must show up here: row count and
+  * `fixtures.ZipfCorpus.zipfDocs` must show up here: row count and
   * `bit_xor(xxhash64(doc_id, text))` per corpus.
   */
 class StressCorpusSpec extends AnyFunSuite {

@@ -334,7 +334,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("plan_zipf").toString
     (0L until 40L).map(i => (i, "x")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val gen = plan(graft.SparkEntry.zipfDocs(spark, dir))
+    val gen = plan(graft.fixtures.ZipfCorpus.zipfDocs(spark, dir))
     assert(!gen.contains("Join") && !gen.contains("Aggregate"),
       s"generation must stay join/agg-free:\n$gen")
     // r22: the fanned narrow seed is materialized by localCheckpoint (a
@@ -349,7 +349,7 @@ class PlanSpec extends AnyFunSuite {
       gen.contains("Scan ExistingRDD"),
       s"generation must read the materialized seed barrier:\n$gen")
     val pj = plan(Dedup.prefixFilterNearDups(
-      graft.SparkEntry.zipfDocs(spark, dir), "doc_id", col("text")))
+      graft.fixtures.ZipfCorpus.zipfDocs(spark, dir), "doc_id", col("text")))
     assert(!pj.contains("CartesianProduct") &&
       !pj.contains("BroadcastNestedLoopJoin"),
       s"zipf prefix join must stay an equi-join:\n$pj")
