@@ -274,19 +274,8 @@ object Bucketer {
     val wide = net.signalsInOrder.size > CodegenArgWidthLimit
     val outline = !wide &&
       net.signalsInOrder.size >= SignalDecoder.OutlineSignalThreshold
-    val canIdType = withLe.schema("can_id").dataType
-    val sigCols = net.signalsInOrder.map { case (m, s) =>
-      if (outline)
-        graft.plans.Outline(Seq(col("can_id") -> canIdType,
-            col("_le") -> LongType, col("_be") -> LongType)) {
-          case Seq(canId, le, be) =>
-            SignalDecoder.signalExprFrom(m, s, canId,
-              x => SignalDecoder.rawExpr(x, le, be), mode)
-        }.as(s.name)
-      else
-        SignalDecoder.signalColumnFrom(m, s, col("can_id"),
-          x => SignalDecoder.rawExpr(x, col("_le"), col("_be")), mode)
-    }
+    val sigCols = SignalDecoder.signalColumns(net,
+      withLe.schema("can_id").dataType, outline, mode)
     val t0Col =
       if (wide) graft.plans.NoCodegen(col("_t0")).as("_t0")
       else col("_t0")

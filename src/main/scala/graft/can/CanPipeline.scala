@@ -13,7 +13,9 @@ import graft.dbc._
   * each split in that order ([[SplitTumbling]]): one staging shuffle, no
   * aggregate and no range sort. If the log turns out not to be in bucket
   * order, the same call runs the general plan of [[CanPipeline.fromFrames]]
-  * instead, so results never depend on the order.
+  * instead, so results never depend on the order. The streaming sources
+  * go through [[CanPipeline.fromStream]], which picks its bucket plan by
+  * the same rule.
   *
   * Config mirrors the reference CLI (`/root/reference/src/arguments.h:12`):
   * `--cache <ms>` → `cacheMs`; `--forward-fill` → `forwardFill`;
@@ -187,6 +189,38 @@ object CanPipeline {
     }
     withMetrics(result, cfg, PipelineMetrics.observeRows)
   }
+
+  /** The streaming twin of [[fromFrames]]: frames(ts_us, can_id, data) from
+    * a [[graft.streaming.CanStream]] source → the bucketed wide stream, one
+    * row per frame at `cacheMs <= 0`, else `exactStream` (keyed on the one
+    * `exactKeys` column, if any) or, by the [[tumbling]] width rule,
+    * `bucketedStream` or `bucketedStreamFromFrames`. Time stays absolute
+    * (`ts_us / 1000`): a stream has no t0, so `adjustTimestamp` does not
+    * apply. Forward fill lives only in the exact state; any other plan
+    * refuses `forwardFill`. The output has `Time_ms` and no event-time
+    * `ts`; `observeMetrics` counts parsed frames and output rows, as batch.
+    */
+  def fromStream(net: Network, frames0: DataFrame, cfg: CanPipelineConfig): DataFrame = {
+    require(!cfg.forwardFill || (cfg.exact && cfg.cacheMs > 0),
+      "streaming forward fill needs exact buckets (exact and cacheMs > 0)")
+    require(cfg.exactKeys.size <= 1,
+      s"streaming exact buckets take at most one key column, got ${cfg.exactKeys}")
+    import graft.streaming.CanStream
+    val frames = withMetrics(frames0, cfg, PipelineMetrics.observeFrames)
+    def wide = CanStream.decoded(net, frames, cfg.typing, carryCols = cfg.exactKeys)
+    val result = tumbling(net, cfg, splitOrdered = false) match {
+      case Some(Tumbling.FrameLevel) =>
+        CanStream.bucketedStreamFromFrames(net, frames, cfg.cacheMs.toLong,
+          policy = cfg.combine, typing = cfg.typing)
+      case Some(_) => CanStream.bucketedStream(wide, cfg.cacheMs.toLong,
+        policy = cfg.combine)
+      case None if cfg.cacheMs <= 0 =>
+        Bucketer.bucket(wide.drop("ts"), BucketMode.PerFrame, cfg.combine)
+      case None => CanStream.exactStream(wide.drop("ts"), cfg.cacheMs,
+        cfg.exactKeys.headOption, cfg.combine, cfg.forwardFill)
+    }
+    withMetrics(result, cfg, PipelineMetrics.observeRows)
+  }
 }
 
 /** Output layout for the wide table at fleet scale (K1 grown up): the
@@ -214,7 +248,6 @@ object WideTableWriter {
   /** Time-range read with directory-level pruning. */
   def readTimeRange(spark: SparkSession, path: String,
       fromMs: Double, untilMs: Double, bucketMs: Long = 3600 * 1000L): DataFrame = {
-    import spark.implicits._
     spark.read.parquet(path)
       .filter(col("hour_bucket") >= math.floor(fromMs / bucketMs).toLong &&
         col("hour_bucket") <= math.floor(untilMs / bucketMs).toLong &&

@@ -97,17 +97,11 @@ object SignalDecoder {
     else (raw.cast(DoubleType) * lit(sig.factor) + lit(sig.offset)).cast(target)
   }
 
-  /** Full per-signal column incl. message dispatch (P2) and mux gating (P5):
-    * null unless `can_id` matches the signal's message (inner-join semantics
-    * — unknown ids produce all-null signal cells and are filtered by F1
-    * upstream) and, for multiplexed signals, the mux switch matches.
-    */
-  def signalColumnFrom(msg: Message, sig: Signal, canId: Column,
-      rawOf: Signal => Column, mode: TypingMode): Column =
-    signalExprFrom(msg, sig, canId, rawOf, mode).as(sig.name)
-
-  /** [[signalColumnFrom]] without the output alias — the tree handed to
-    * [[graft.plans.Outline]] so the alias stays at the projection level.
+  /** Full per-signal decode tree incl. message dispatch (P2) and mux
+    * gating (P5), without the output alias: null unless `can_id` matches
+    * the signal's message (inner-join semantics — unknown ids produce
+    * all-null signal cells and are filtered by F1 upstream) and, for
+    * multiplexed signals, the mux switch matches.
     */
   private[can] def signalExprFrom(msg: Message, sig: Signal, canId: Column,
       rawOf: Signal => Column, mode: TypingMode): Column = {
@@ -131,9 +125,26 @@ object SignalDecoder {
     when(canId === lit(msg.id), gated)
   }
 
-  def signalColumn(msg: Message, sig: Signal, canId: Column, le: Column, be: Column,
-      mode: TypingMode): Column =
-    signalColumnFrom(msg, sig, canId, s => rawExpr(s, le, be), mode)
+  /** One decode column per signal, in network order, over the columns
+    * `can_id` (of type `canIdType`) and the two u64 payload views `_le`
+    * and `_be`. With `outline` each signal's tree is outlined into its own
+    * generated method ([[graft.plans.Outline]], which keeps the alias at
+    * the projection level); otherwise the trees inline. [[wideFrame]] and
+    * [[Bucketer.decodeAndReassemble]] both decode through this.
+    */
+  private[can] def signalColumns(net: Network, canIdType: DataType,
+      outline: Boolean, mode: TypingMode): Seq[Column] =
+    net.signalsInOrder.map { case (m, s) =>
+      if (outline)
+        graft.plans.Outline(Seq(col("can_id") -> canIdType,
+            col("_le") -> LongType, col("_be") -> LongType)) {
+          case Seq(canId, le, be) =>
+            signalExprFrom(m, s, canId, x => rawExpr(x, le, be), mode)
+        }.as(s.name)
+      else
+        signalExprFrom(m, s, col("can_id"),
+          x => rawExpr(x, col("_le"), col("_be")), mode).as(s.name)
+    }
 
   /** Signal count at or above which [[wideFrame]] outlines each signal's
     * decode tree into its own generated method ([[graft.plans.Outline]]);
@@ -201,17 +212,28 @@ object SignalDecoder {
     }
   }
 
+  /** Known-id frames (F1) with the shared u64 payload views — the ONE
+    * place the id filter and the `_be`/`_le` assembly live, shared by
+    * [[wideFrame]] and [[graft.can.Bucketer.frameViews]] (a fix to id
+    * matching or view assembly must reach both paths).
+    */
+  private[graft] def knownWithU64Views(net: Network,
+      frames: DataFrame): DataFrame = {
+    val ids = net.messages.map(_.id)
+    frames.filter(col("can_id").isin(ids: _*)) // F1: unknown ids dropped
+      .withColumn("_be", graft.plans.PayloadU64(col("data"), littleEndian = false))
+      .withColumn("_le", graft.plans.PayloadU64(col("data"), littleEndian = true))
+  }
+
   /** frames(ts_ms, can_id, data) → wide per-frame table:
     * `(ts_ms, sig1, sig2, ...)` — one row per frame, nulls for signals not
     * carried by that frame's message. The known-id filter (F1) is applied
     * here and pushes down to the scan.
     *
-    * `nativeExtract = true` (default) assembles the two shared u64 views
-    * with [[graft.plans.PayloadU64]] (one codegen byte loop per endianness
-    * per frame, no string materialization) and extracts each signal with
-    * constant shift/mask; `false` uses the pure-built-in assembly
-    * (`conv(rpad(hex(...)))` + expression-level reverseBytes) as the
-    * differential baseline. Per-signal [[graft.plans.CanSignalExtract]]
+    * The two shared u64 views are assembled with [[graft.plans.PayloadU64]]
+    * (one codegen byte loop per endianness per frame, no string
+    * materialization) and each signal is extracted with constant
+    * shift/mask. Per-signal [[graft.plans.CanSignalExtract]]
     * ([[rawNative]]) exists for single-signal use and SQL, but repeats the
     * assembly per signal — shared views win once messages carry several
     * signals.
@@ -223,52 +245,13 @@ object SignalDecoder {
     * `carryCols` are passed through unchanged (e.g. `iface` as an exact-
     * bucketing key).
     */
-  /** Known-id frames (F1) with the shared u64 payload views — the ONE
-    * place the id filter and the `_be`/`_le` assembly live, shared by
-    * [[wideFrame]]'s native branch and [[graft.can.Bucketer.frameViews]]
-    * (a fix to id matching or view assembly must reach both paths).
-    */
-  private[graft] def knownWithU64Views(net: Network,
-      frames: DataFrame): DataFrame = {
-    val ids = net.messages.map(_.id)
-    frames.filter(col("can_id").isin(ids: _*)) // F1: unknown ids dropped
-      .withColumn("_be", graft.plans.PayloadU64(col("data"), littleEndian = false))
-      .withColumn("_le", graft.plans.PayloadU64(col("data"), littleEndian = true))
-  }
-
   def wideFrame(net: Network, frames: DataFrame,
       mode: TypingMode = TypingMode.Intended,
-      nativeExtract: Boolean = true,
       carryCols: Seq[String] = Nil,
       outlineThreshold: Int = OutlineSignalThreshold): DataFrame = {
-    val ids = net.messages.map(_.id)
-    val known = frames.filter(col("can_id").isin(ids: _*)) // F1: unknown ids dropped
-    if (nativeExtract) {
-      // shared native u64 assembly (one byte loop per endianness per frame),
-      // constant shift/mask per signal
-      val canIdType = frames.schema("can_id").dataType
-      val outline = net.signalsInOrder.size >= outlineThreshold
-      val withU64 = knownWithU64Views(net, frames)
-      val sigCols = net.signalsInOrder.map { case (m, s) =>
-        if (outline)
-          graft.plans.Outline(Seq(col("can_id") -> canIdType,
-              col("_le") -> LongType, col("_be") -> LongType)) {
-            case Seq(canId, le, be) =>
-              signalExprFrom(m, s, canId, x => rawExpr(x, le, be), mode)
-          }.as(s.name)
-        else
-          signalColumnFrom(m, s, col("can_id"),
-            x => rawExpr(x, col("_le"), col("_be")), mode)
-      }
-      withU64.select(col("ts_ms") +: carryCols.map(col) ++: sigCols: _*)
-    } else {
-      val withU64 = known
-        .withColumn("_be", beU64(col("data")))
-        .withColumn("_le", leU64(col("_be")))
-      val sigCols = net.signalsInOrder.map { case (m, s) =>
-        signalColumn(m, s, col("can_id"), col("_le"), col("_be"), mode)
-      }
-      withU64.select(col("ts_ms") +: carryCols.map(col) ++: sigCols: _*)
-    }
+    val sigCols = signalColumns(net, frames.schema("can_id").dataType,
+      outline = net.signalsInOrder.size >= outlineThreshold, mode)
+    knownWithU64Views(net, frames)
+      .select(col("ts_ms") +: carryCols.map(col) ++: sigCols: _*)
   }
 }

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.can._
 import graft.dbc.DbcParser
@@ -32,6 +32,13 @@ import graft.streaming.CanStream
   * `candump -L can0 > /dev/tcp/<host>/<port>`), then here
   * `--if <host>:<port> --socket`. The line format is identical to `--file`
   * replay, so the whole decode surface is exercised either way.
+  *
+  * Every mode builds its output from one [[graft.can.CanPipelineConfig]]
+  * through [[graft.can.CanPipeline]]; the streaming modes (`--socket`,
+  * `--process`, `--stream-file`) through `CanPipeline.fromStream`. They
+  * take `--forward-fill` only with `--exact --cache > 0`, keep absolute
+  * timestamps (a stream's t0 is unknown) and, as batch, count parsed
+  * frames as packets.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -160,12 +167,21 @@ object Main {
       System.err.println(s"--state-partitions must be positive\n$usage")
       sys.exit(2)
     }
-    if (statePartitions.isDefined &&
-        !Set("socket", "process", "stream-file").contains(mode)) {
+    val streaming = Set("socket", "process", "stream-file").contains(mode)
+    if (statePartitions.isDefined && !streaming) {
       System.err.println(
         s"--state-partitions applies to streaming modes only\n$usage")
       sys.exit(2)
     }
+    if (streaming && ffill && !(exact && cacheMs > 0)) {
+      System.err.println(
+        s"streaming --forward-fill requires --exact and --cache > 0\n$usage")
+      sys.exit(2)
+    }
+    val cfg = CanPipelineConfig(cacheMs = cacheMs, exact = exact,
+      exactKeys = bucketKey.toSeq,
+      forwardFill = ffill, adjustTimestamp = adjust, observeMetrics = true,
+      lenientDbc = lenientDbc)
     val spark = graft.GraftSession.staticTuning(SparkSession.builder()
       .appName("graft-can")
       .config("spark.sql.shuffle.partitions",
@@ -175,16 +191,11 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     // K4: rows → line protocol, Time_ms (fractional ms) → integer ns.
-    // The time column moves out of the field set into the line timestamp;
-    // the streaming wide frame's event-time twin `ts` (TimestampType,
-    // added by CanStream.decoded for watermarks) drops too — it mirrors
-    // Time_ms and is not a line-protocol field type.
-    def influxUpload(df: org.apache.spark.sql.DataFrame): Unit = {
+    // The time column moves out of the field set into the line timestamp.
+    def influxUpload(df: DataFrame): Unit = {
       import org.apache.spark.sql.functions.{col, lit}
       graft.sinks.InfluxLineSink.upload(
-        df.drop("ts")
-          .withColumn("__influx_ns",
-            (col(DbcColumns.TimeCol) * 1e6).cast("long"))
+        df.withColumn("__influx_ns", (col(DbcColumns.TimeCol) * 1e6).cast("long"))
           .drop(DbcColumns.TimeCol),
         influxHost, influxToken, influxTable,
         Seq("srcfile" -> lit(in)), "__influx_ns")
@@ -203,7 +214,7 @@ object Main {
     // one buffer/message from the driver by default (the reference's
     // chunk contract at run granularity), one message per partition
     // serialized on the executors under --ws-distributed
-    def wsPush(df: org.apache.spark.sql.DataFrame): Unit = wsTarget.foreach {
+    def wsPush(df: DataFrame): Unit = wsTarget.foreach {
       case (h, p, t) =>
         if (wsDistributed) {
           val schema = df.schema
@@ -225,7 +236,7 @@ object Main {
         }
     }
 
-    def writeBatch(wide: org.apache.spark.sql.DataFrame): Unit = {
+    def writeBatch(wide: DataFrame): Unit = {
       val before = partFiles()
       wide.write.mode("append").parquet(out) // K1 batch
       // K3/K4 batch: read back the WRITTEN output rather than re-running
@@ -250,21 +261,11 @@ object Main {
     }
 
     mode match {
-      case "file" =>
+      case "file" | "stdin" => // S3: `cat log | graft.cli.Main <dbc> --stdin`
         spark.listenerManager.register(new PipelineMetrics.Progress()) // T7
-        val cfg = CanPipelineConfig(cacheMs = cacheMs, exact = exact,
-          exactKeys = bucketKey.toSeq,
-          forwardFill = ffill, adjustTimestamp = adjust, observeMetrics = true,
-          lenientDbc = lenientDbc)
-        writeBatch(CanPipeline.decodeLog(spark, dbc, in, cfg))
-      case "stdin" => // S3: `cat log | graft.cli.Main <dbc> --stdin`
-        spark.listenerManager.register(new PipelineMetrics.Progress()) // T7
-        val cfg = CanPipelineConfig(cacheMs = cacheMs, exact = exact,
-          exactKeys = bucketKey.toSeq,
-          forwardFill = ffill, adjustTimestamp = adjust, observeMetrics = true,
-          lenientDbc = lenientDbc)
-        writeBatch(CanPipeline.decodeStdin(spark, dbc, cfg))
-      case "socket" | "process" | "stream-file" =>
+        writeBatch(if (mode == "file") CanPipeline.decodeLog(spark, dbc, in, cfg)
+          else CanPipeline.decodeStdin(spark, dbc, cfg))
+      case _ =>
         spark.streams.addListener(new PipelineMetrics.StreamingProgress()) // T7
         stateBackend.foreach(CanStream.StateBackend.configure(spark, _))
         val net = DbcParser.parseFile(dbc, lenientDbc)
@@ -286,24 +287,11 @@ object Main {
                 sys.exit(2)
             }
         }
-        // one wide row per decoded frame here, so the frame counter sits on
-        // the decode output (same number the reference's msg_count tracks)
-        val wide = PipelineMetrics.observeFrames(
-          CanStream.decoded(net, frames, carryCols = bucketKey.toSeq))
-        val bucketed =
-          if (cacheMs <= 0) wide.drop("ts")
-          else if (exact) CanStream.exactStream(wide.drop("ts"), cacheMs, bucketKey)
-          else if (net.signalsInOrder.size > Bucketer.CodegenArgWidthLimit)
-            // fleet-width streaming tumbling: aggregate the raw frame
-            // payload (codegen at any width), decode only the winners —
-            // the streaming mirror of CanPipeline's batch routing
-            CanStream.bucketedStreamFromFrames(net, frames, cacheMs.toLong,
-              observe = PipelineMetrics.observeFrames)
-          else CanStream.bucketedStream(wide, cacheMs.toLong)
+        val (bucketed, sideFrame) = streamFrames(net, frames, cfg)
         // exact mode carries graft-encoded flatMapGroupsWithState keys:
         // refuse a checkpoint written under an older key format BEFORE
         // start() (a silent restart would orphan all open-bucket state).
-        // EVERY durable checkpoint that will hold exactStream state is
+        // EVERY durable checkpoint that will hold exact bucket state is
         // gated — the influx and ws side queries re-execute the same
         // stateful plan against their OWN checkpoints, which would
         // otherwise reopen the exact orphaning this gate closes (the
@@ -317,23 +305,18 @@ object Main {
         }
         val q = CanStream.parquetSink(bucketed, out, s"$out.checkpoint",
           Trigger.ProcessingTime("1 second"),
-          effectiveStatePartitions(statePartitions, exact, cacheMs, bucketKey))
+          effectiveStatePartitions(statePartitions, cfg))
         val liveQ = if (live.nonEmpty)
-          Some(CanStream.consoleSink(
-            if (cacheMs <= 0) wide.withColumnRenamed("ts_ms", DbcColumns.TimeCol) else bucketed,
-            live.reverse))
+          Some(CanStream.consoleSink(sideFrame, live.reverse))
         else None
         // K4 streaming: a second query on the decoded stream (the liveQ
         // precedent), uploading each micro-batch as line protocol —
         // at-least-once, idempotent server-side by (measurement, tagset,
         // timestamp)
         val influxQ = if (influxHost.length > 2)
-          Some((if (cacheMs <= 0)
-              wide.withColumnRenamed("ts_ms", DbcColumns.TimeCol)
-            else bucketed)
-            .writeStream
+          Some(sideFrame.writeStream
             .option("checkpointLocation", s"$out.influx-checkpoint")
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            .foreachBatch { (b: DataFrame, _: Long) =>
               influxUpload(b)
             }
             .trigger(Trigger.ProcessingTime("1 second"))
@@ -344,18 +327,11 @@ object Main {
         // WebSocket, chunk-per-message (or partition-per-message under
         // --ws-distributed)
         val wsQ = wsTarget.map { case (h, p, t) =>
-          // drop the event-time twin `ts` (TimestampType) like the
-          // parquet/influx paths do — the Arrow sink maps no timestamp
-          // type, and in per-frame mode (cacheMs <= 0) `wide` still
-          // carries it; drop() is a no-op when bucketing removed it
-          val src = (if (cacheMs <= 0)
-            wide.withColumnRenamed("ts_ms", DbcColumns.TimeCol)
-          else bucketed).drop("ts")
           if (wsDistributed)
-            graft.sinks.WebSocketIpc.wsSinkDistributed(src, h, p, t,
+            graft.sinks.WebSocketIpc.wsSinkDistributed(sideFrame, h, p, t,
               s"$out.ws-checkpoint", Trigger.ProcessingTime("1 second"))
           else
-            graft.sinks.WebSocketIpc.wsSink(src, h, p, t,
+            graft.sinks.WebSocketIpc.wsSink(sideFrame, h, p, t,
               s"$out.ws-checkpoint", Trigger.ProcessingTime("1 second"))
         }
         if (mode == "socket" && (liveQ.size + influxQ.size + wsQ.size) > 0)
@@ -430,6 +406,15 @@ object Main {
     failed.orElse(Some(q).filter(_.exception.isDefined).map(Right(_)))
   }
 
+  /** The Parquet sink's frame and the side sinks' (console, Influx,
+    * WebSocket). Each side query re-runs the plan, so only the Parquet
+    * sink's frame observes the progress counts.
+    */
+  private[cli] def streamFrames(net: graft.dbc.Network, frames: DataFrame,
+      cfg: CanPipelineConfig): (DataFrame, DataFrame) =
+    (CanPipeline.fromStream(net, frames, cfg),
+      CanPipeline.fromStream(net, frames, cfg.copy(observeMetrics = false)))
+
   /** Streaming state-store partition count the CLI starts a query with.
     * Keyless exact state is a SINGLE group (one stateful task by
     * construction), so its right-sized store count is 1 — committing the
@@ -439,9 +424,9 @@ object Main {
     * always wins; existing checkpoints keep their frozen count either way.
     */
   private[cli] def effectiveStatePartitions(explicit: Option[Int],
-      exact: Boolean, cacheMs: Double, bucketKey: Option[String]): Option[Int] =
+      cfg: CanPipelineConfig): Option[Int] =
     explicit.orElse(
-      if (exact && cacheMs > 0 && bucketKey.isEmpty) Some(1) else None)
+      if (cfg.exact && cfg.cacheMs > 0 && cfg.exactKeys.isEmpty) Some(1) else None)
 
   private val usage =
     """usage: graft.cli.Main <dbc> --if <input> --of <out.parquet>
@@ -456,6 +441,10 @@ object Main {
       |  --socket: --if is host:port of a candump text stream
       |  --process: --if is a bridge command (e.g. "candump -L can0")
       |  --stream-file: --if is a directory watched for candump log files
+      |  streaming modes (--socket, --process, --stream-file) take
+      |    --forward-fill only with --exact and --cache > 0, keep absolute
+      |    timestamps (a stream's t0 is unknown), and count parsed frames
+      |    as packets, as batch does
       |  --max-lines-per-trigger: micro-batch admission bound for --process
       |    replays (default 60000; 0 = unbounded)
       |  --max-files-per-trigger: micro-batch admission bound for

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftshim.Shims
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** `flt32_` IEEE-754 reinterpretation (reference P6,
   * `/root/reference/README.md:58`; intended helpers

@@ -259,21 +259,18 @@ object CanStream {
     * `ts_us` unless the caller already provides both (time-unit-agnostic
     * callers — e.g. a gate keeping µs end-to-end — pre-derive them; the
     * only requirement is that `ts` quantizes `ts_ms` no coarser than
-    * `cacheMs` buckets). `observe` is applied to the known-id frame scan
-    * (the CLI threads the T7 frame counter through it).
+    * `cacheMs` buckets).
     */
   def bucketedStreamFromFrames(net: Network, frames: DataFrame, cacheMs: Long,
       watermark: String = "0 seconds",
       policy: CombinePolicy = CombinePolicy.LastWins,
-      typing: TypingMode = TypingMode.Intended,
-      observe: DataFrame => DataFrame = identity): DataFrame = {
+      typing: TypingMode = TypingMode.Intended): DataFrame = {
     require(cacheMs > 0, "bucketedStreamFromFrames requires cacheMs > 0")
     val withTs =
       if (frames.columns.contains("ts_ms") && frames.columns.contains("ts")) frames
       else frames.withColumn("ts_ms", col("ts_us") / 1000.0)
         .withColumn("ts", timestamp_millis(col("ts_ms").cast("long")))
-    val views = observe(Bucketer.frameViews(net, withTs))
-      .withWatermark("ts", watermark)
+    val views = Bucketer.frameViews(net, withTs).withWatermark("ts", watermark)
     val winners = Bucketer.winnerFrames(views,
       window(col("ts"), s"$cacheMs milliseconds"), policy)
     Bucketer.decodeAndReassemble(net, winners, "window",

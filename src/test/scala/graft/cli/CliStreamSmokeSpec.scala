@@ -51,6 +51,13 @@ class CliStreamSmokeSpec extends AnyFunSuite {
     val (c2, log2) = run("--if", "x.log", "--cache", "abc") // non-numeric
     assert(c2 == 2, s"expected usage exit 2:\n$log2")
     assert(log2.contains("non-numeric") && log2.contains("usage:"), log2)
+    // streaming forward fill exists only in the exact bucket state: refused,
+    // never silently dropped
+    val (c3, log3) = run("--if", "in_dir", "--stream-file", "--cache", "10",
+      "--forward-fill")
+    assert(c3 == 2, s"expected usage exit 2:\n$log3")
+    assert(log3.contains("--forward-fill requires --exact") &&
+      log3.contains("usage:"), log3)
   }
 
   /** Runs the batch CLI on `fixtures/mini.log` with `--file` and `flags`
@@ -114,11 +121,14 @@ class CliStreamSmokeSpec extends AnyFunSuite {
   test("keyless exact streaming auto-sizes state partitions to its single group") {
     // keyless exact → 1 store; keyed / tumbling / explicit-flag cases
     // keep the session default or the explicit value
-    assert(Main.effectiveStatePartitions(None, exact = true, 10.0, None) == Some(1))
-    assert(Main.effectiveStatePartitions(None, exact = true, 10.0, Some("iface")).isEmpty)
-    assert(Main.effectiveStatePartitions(None, exact = false, 10.0, None).isEmpty)
-    assert(Main.effectiveStatePartitions(None, exact = true, 0.0, None).isEmpty)
-    assert(Main.effectiveStatePartitions(Some(16), exact = true, 10.0, None) == Some(16))
+    import graft.can.CanPipelineConfig
+    val keyless = CanPipelineConfig(cacheMs = 10.0, exact = true)
+    assert(Main.effectiveStatePartitions(None, keyless) == Some(1))
+    assert(Main.effectiveStatePartitions(None,
+      keyless.copy(exactKeys = Seq("iface"))).isEmpty)
+    assert(Main.effectiveStatePartitions(None, keyless.copy(exact = false)).isEmpty)
+    assert(Main.effectiveStatePartitions(None, keyless.copy(cacheMs = 0.0)).isEmpty)
+    assert(Main.effectiveStatePartitions(Some(16), keyless) == Some(16))
   }
 
   test("CLI batch --influx-host uploads decoded rows as line protocol " +

@@ -30,7 +30,9 @@ dump() { # checkout out-dir query-list
 
 # what differs between two runs of the same plan: expression, lambda
 # variable, RDD, plan, codegen and query-stage ids; object hashes; source
-# line numbers of RDD call sites; digits in temporary file names
+# line numbers of RDD call sites; digits in temporary file names, in
+# file: URIs and in the gates' scratch directories (a streaming sink's
+# MetadataLogFileIndex [/tmp/graft_qsd<digits>/out] carries no scheme)
 mask() {
   perl -0pi -e '
     s/#[0-9]+/#/g; s/(lambda [a-z]+)_[0-9]+/${1}_N/g; s/RDD\[[0-9]+\]/RDD[]/g;
@@ -38,7 +40,8 @@ mask() {
     s/(QueryStage\n(?:[^\n]+\n)*?Arguments: )[0-9]+/${1}N/g;
     s/Lambda\$[0-9]+\/0x[0-9a-f]+/Lambda/g; s/\@[0-9a-f]{4,8}\b/\@N/g;
     s/\.scala:[0-9]+/.scala:N/g;
-    s{(file:/[^ ,\]]*)}{($x = $1) =~ s/[0-9]{6,}/N/g; $x}ge' "$@"
+    s{(file:/[^ ,\]]*)}{($x = $1) =~ s/[0-9]{6,}/N/g; $x}ge;
+    s{(/graft_[a-z]+)[0-9]+}{${1}N}g' "$@"
 }
 
 # an empty list dumps every registered query; the ref gets the same names,
