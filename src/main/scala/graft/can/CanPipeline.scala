@@ -197,14 +197,18 @@ object CanPipeline {
     * `bucketedStream` or `bucketedStreamFromFrames`. Time stays absolute
     * (`ts_us / 1000`): a stream has no t0, so `adjustTimestamp` does not
     * apply. Forward fill lives only in the exact state; any other plan
-    * refuses `forwardFill`. The output has `Time_ms` and no event-time
-    * `ts`; `observeMetrics` counts parsed frames and output rows, as batch.
+    * refuses `forwardFill`. Tumbling windows are whole milliseconds, so a
+    * fractional `cacheMs` is refused outside the exact state. The output
+    * has `Time_ms` and no event-time `ts`; `observeMetrics` counts parsed
+    * frames and output rows, as batch.
     */
   def fromStream(net: Network, frames0: DataFrame, cfg: CanPipelineConfig): DataFrame = {
     require(!cfg.forwardFill || (cfg.exact && cfg.cacheMs > 0),
       "streaming forward fill needs exact buckets (exact and cacheMs > 0)")
     require(cfg.exactKeys.size <= 1,
       s"streaming exact buckets take at most one key column, got ${cfg.exactKeys}")
+    require(cfg.exact || cfg.cacheMs <= 0 || cfg.cacheMs == cfg.cacheMs.floor,
+      s"streaming tumbling buckets take whole milliseconds, got cacheMs=${cfg.cacheMs}")
     import graft.streaming.CanStream
     val frames = withMetrics(frames0, cfg, PipelineMetrics.observeFrames)
     def wide = CanStream.decoded(net, frames, cfg.typing, carryCols = cfg.exactKeys)

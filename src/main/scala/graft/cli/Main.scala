@@ -36,9 +36,9 @@ import graft.streaming.CanStream
   * Every mode builds its output from one [[graft.can.CanPipelineConfig]]
   * through [[graft.can.CanPipeline]]; the streaming modes (`--socket`,
   * `--process`, `--stream-file`) through `CanPipeline.fromStream`. They
-  * take `--forward-fill` only with `--exact --cache > 0`, keep absolute
-  * timestamps (a stream's t0 is unknown) and, as batch, count parsed
-  * frames as packets.
+  * take `--forward-fill` only with `--exact --cache > 0` and a fractional
+  * `--cache` only with `--exact`, keep absolute timestamps (a stream's t0
+  * is unknown) and, as batch, count parsed frames as packets.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -176,6 +176,11 @@ object Main {
     if (streaming && ffill && !(exact && cacheMs > 0)) {
       System.err.println(
         s"streaming --forward-fill requires --exact and --cache > 0\n$usage")
+      sys.exit(2)
+    }
+    if (streaming && !exact && cacheMs > 0 && cacheMs != cacheMs.floor) {
+      System.err.println(
+        s"streaming --cache without --exact takes whole milliseconds\n$usage")
       sys.exit(2)
     }
     val cfg = CanPipelineConfig(cacheMs = cacheMs, exact = exact,
@@ -442,9 +447,9 @@ object Main {
       |  --process: --if is a bridge command (e.g. "candump -L can0")
       |  --stream-file: --if is a directory watched for candump log files
       |  streaming modes (--socket, --process, --stream-file) take
-      |    --forward-fill only with --exact and --cache > 0, keep absolute
-      |    timestamps (a stream's t0 is unknown), and count parsed frames
-      |    as packets, as batch does
+      |    --forward-fill only with --exact and --cache > 0, a fractional
+      |    --cache only with --exact, keep absolute timestamps (a stream's
+      |    t0 is unknown), and count parsed frames as packets, as batch does
       |  --max-lines-per-trigger: micro-batch admission bound for --process
       |    replays (default 60000; 0 = unbounded)
       |  --max-files-per-trigger: micro-batch admission bound for

@@ -202,10 +202,12 @@ private[graft] object SharedSql {
        |     WHEN mx > 0 THEN CASE $pickCase END
        |     ELSE 'unknown' END""".stripMargin
 
-  // cosine plumbing over quantized embeddings
+  // cosine plumbing over quantized embeddings; the product is taken in
+  // DOUBLE, exact for a float32 times 1000 as in Similarity.quantize — a
+  // FLOAT product rounds 0.3195f*1000 up to 319.5 and then to 320
   val quantCteBody =
     """q AS (SELECT vec_id, label,
-      |  list_transform(embedding, x -> CAST(round(x*1000) AS BIGINT)) AS qe
+      |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qe
       |  FROM embeddings),
       |n AS (SELECT vec_id, label, qe,
       |  list_reduce(list_transform(qe, x -> x*x), (a,b) -> a+b) AS nrm FROM q)""".stripMargin

@@ -11,11 +11,16 @@ import org.apache.spark.sql.functions._
   * deterministic double (same integer operands → same IEEE result in every
   * engine), which makes brute-force and LSH variants oracle-checkable.
   *
-  * Scale design: brute-force top-k is the correctness baseline (one
-  * broadcast of the query vector, fully parallel map + a k-row ordered
-  * take). The LSH variant buckets vectors by hyperplane sign bits so a
-  * 100 TB corpus only scans the query's bucket (candidates ≈ N / 2^planes),
-  * at a recall cost; both are exposed side by side.
+  * Scale design: each ANN index has ONE top-k path, its `*TopKBatch`
+  * entry — a query SET joined against the corpus or layout in one job and
+  * ranked per query by a `row_number` window cut at `rn <= k`. A single
+  * query is a batch of one: the single-query entries ([[bruteForceTopK]],
+  * [[lshTopK]], [[ivfTopK]], …) build the one-row `(query_id, qv)` set
+  * and call their batch twin. Brute-force top-k is the correctness
+  * baseline (every vector scored against the broadcast query set); the
+  * LSH variant buckets vectors by hyperplane sign bits so a 100 TB corpus
+  * only scans the query's bucket (candidates ≈ N / 2^planes), at a recall
+  * cost; both are exposed side by side.
   *
   * The recall cost is MEASURED, not guessed (`AnnRecallSpec`, clustered
   * 500×64 corpus, recall@10 vs [[bruteForceTopK]] ground truth, floors
@@ -53,29 +58,57 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     qdot(a, b).cast("double") / (sqrt(qnorm2(a).cast("double")) * sqrt(qnorm2(b).cast("double")))
 
-  /** Fail-fast existence check for the query id — the contract every
-    * literal-query entry point (pqTopK, lshTopKPartitioned, …) already
-    * enforces via its collect. The broadcast-query forms would
-    * otherwise return an EMPTY top-k for a typoed id, indistinguishable
-    * from "no neighbors". One pushdown-filtered limit-1 job.
+  /** Fail-fast existence check for the query id: a typoed id must fail,
+    * not return an EMPTY top-k indistinguishable from "no neighbors".
     */
   private def requireQueryExists(emb: DataFrame, queryId: Long): Unit =
-    require(!emb.filter(col("vec_id") === queryId).isEmpty,
-      s"query vec_id=$queryId not found in the embedding corpus")
+    require(!emb.filter(col("vec_id") === queryId).isEmpty, notInCorpus(queryId))
 
-  /** Brute-force top-k nearest to the vector with id `queryId`.
-    * Deterministic: ordered by (cosine desc, vec_id).
+  private def notInCorpus(queryId: Long): String =
+    s"query vec_id=$queryId not found in the embedding corpus"
+
+  /** The single-query entries' one path: `batch` (a `*TopKBatch` twin)
+    * over the one-row query set `query` (query_id, qv), `query_id`
+    * dropped, rows in (score desc, vec_id) order (the window already cut
+    * to k; the `limit` plans the sort as one `TakeOrderedAndProject`).
+    * The set is collected here in one job, so an absent id fails with
+    * `notFound`, and the twin reads a driver-local relation. `nonZero`
+    * refuses a zero-norm query, whose probe pick would divide by zero.
     */
-  def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    requireQueryExists(emb, queryId)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select(quantize(col("embedding")).as("qv"))
-    emb.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), cosine(quantize(col("embedding")), col("qv")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+  private def oneQuery(query: DataFrame, k: Int, notFound: => String,
+      nonZero: Boolean = false)(batch: DataFrame => DataFrame): DataFrame = {
+    val rows = query.collect()
+    require(rows.nonEmpty, notFound)
+    require(!nonZero || rows.forall(_.getSeq[Long](1).map(x => x * x).sum != 0L),
+      "zero-norm query vector")
+    batch(localRelation(query, rows)).drop("query_id")
+      .orderBy(col("score").desc, col("vec_id")).limit(k)
   }
+
+  private def corpusTopK(emb: DataFrame, queryId: Long, k: Int)(
+      batch: DataFrame => DataFrame): DataFrame =
+    oneQuery(batchQueries(emb, col("vec_id") === queryId), k,
+      notInCorpus(queryId))(batch)
+
+  /** A layout entry's one-row query set: the caller's quantized
+    * `queryVec`, else the `qv` stored for `queryId` in the layout `data`.
+    */
+  private def layoutQuery(spark: org.apache.spark.sql.SparkSession, data: String,
+      queryId: Long, queryVec: Option[Seq[Long]]): DataFrame = queryVec match {
+    case Some(v) => spark.createDataFrame(Seq((queryId, v))).toDF("query_id", "qv")
+    case None => spark.read.parquet(data).filter(col("vec_id") === queryId)
+      .select(col("vec_id").as("query_id"), col("qv"))
+  }
+
+  private def localRelation(like: DataFrame,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
+
+  /** Brute-force top-k nearest to the vector with id `queryId`:
+    * [[bruteForceTopKBatch]] over the one-row query set.
+    */
+  def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame =
+    corpusTopK(emb, queryId, k)(bruteForceTopKBatch(emb, _, k))
 
   /** Per-vector symmetric int8 codes of a quantized vector: each
     * component maps to `round(|x|*127/maxabs) * sign(x)` with the
@@ -174,6 +207,9 @@ object Similarity {
     Array.tabulate(m)(s => first.map(_.slice(s * sub, (s + 1) * sub)))
   }
 
+  private def ldot(a: Array[Long], b: Array[Long]): Long =
+    a.iterator.zip(b.iterator).map { case (x, y) => x * y }.sum
+
   /** PQ top-k with asymmetric distance computation (ADC) — the standard
     * 100 TB ANN compression: each vector is stored as `m` small codes
     * (here 8 codes of 4 bits each ≈ 4 bytes/vector vs 256 for floats),
@@ -181,8 +217,8 @@ object Similarity {
     * `m` precomputed table lookups.
     *
     * Scale shape: the codebook and the single query vector are driver
-    * collects (both tiny by construction — the batch entry points keep
-    * query SETS distributed; this is the single-probe form). Encoding
+    * collects (both tiny by construction; the batch entry points score
+    * query SETS in one job; this is the single-probe form). Encoding
     * is a one-time map-only pass whose inner loop is `m × kCent`
     * codegen [[qdot]]s per row against literal centroids — at 100 TB
     * codes are written once into the stored layout and every later
@@ -201,22 +237,6 @@ object Similarity {
     * [[quantizedTopK]]. The exact cosine rides along for the shortlist
     * rerank.
     */
-  /** PQ encode: `codes(s) = argmin_c ‖v_s − C_sc‖²` ranked by the
-    * integer key `‖C_sc‖² − 2·⟨v_s, C_sc⟩` (the `‖v_s‖²` term is
-    * constant within each argmin), ties to the lowest code — one
-    * native [[graft.plans.PqEncode]] expression. The expression-TREE
-    * formulations measured hundreds of µs/row on the bench board (the
-    * struct-`array_min` and packed-`least` autopsies live on that
-    * expression's scaladoc); the opaque codegen loop is ~m·kCent·sub
-    * long multiplies with zero allocation.
-    */
-  private def pqCodes(qv: Column, cb: Array[Array[Array[Long]]],
-      cc2: Array[Array[Long]], m: Int, kCent: Int, sub: Int): Column =
-    graft.plans.PqEncode(qv, cb, cc2)
-
-  private def ldot(a: Array[Long], b: Array[Long]): Long =
-    a.iterator.zip(b.iterator).map { case (x, y) => x * y }.sum
-
   def pqTopK(emb: DataFrame, queryId: Long, k: Int, m: Int = 8,
       kCent: Int = 16, dims: Int = 64, stride: Long = 1L): DataFrame = {
     val sub = dims / m
@@ -237,7 +257,7 @@ object Similarity {
 
     val coded = emb.filter(col("vec_id") =!= queryId)
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("codes", pqCodes(col("qv"), cb, cc2, m, kCent, sub))
+      .withColumn("codes", graft.plans.PqEncode(col("qv"), cb, cc2))
       // materialize the row norm ONCE (the pqTopKBatch _vn pattern):
       // inside when-branches codegen CSE skips conditionally-executed
       // subtrees, so an inline qnorm2 would re-run the 64-multiply dot
@@ -358,56 +378,30 @@ object Similarity {
       .otherwise(lit(0L))
   }
 
-  /** LSH-bucketed top-k: scan only the query's bucket. */
-  def lshTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    requireQueryExists(emb, queryId)
-    val withBucket = emb
-      .withColumn("qv", quantize(col("embedding")))
-      .withColumn("bucket", lshBucket(col("qv")))
-    val q = withBucket.filter(col("vec_id") === queryId)
-      .select(col("qv").as("query_v"), col("bucket").as("qbucket"))
-    withBucket
-      .crossJoin(broadcast(q))
-      .filter(col("bucket") === col("qbucket") && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), col("query_v")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+  /** LSH-bucketed top-k: scan only the query's bucket —
+    * [[lshMultiProbeTopK]] at `maxHamming = 0`.
+    */
+  def lshTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame =
+    lshMultiProbeTopK(emb, queryId, k, maxHamming = 0)
 
   /** Multi-probe LSH top-k: scan the query's sign-bucket AND every bucket
     * within hamming distance `maxHamming` of it — the standard recall lift
     * for hyperplane LSH (a cluster that straddles one hyperplane splits
     * across exactly the distance-1 buckets, which a single probe misses).
+    * [[lshTopKBatch]] over the one-row query set.
     *
     * Candidate bound: sum_{i<=h} C(p, i) / 2^p of the corpus — at the
     * default p=6 planes, h=1 that is 7/64 ≈ 11% of rows scanned (vs 1/64
-    * single-probe), still a broadcast-filter scan with no shuffle and no
-    * cartesian. Measured recall@10 on the AnnRecallSpec clustered corpus:
-    * 0.84 (vs 0.50 single-probe; floor asserted ≥ 0.8).
+    * single-probe). Measured recall@10 on the AnnRecallSpec clustered
+    * corpus: 0.84 (vs 0.50 single-probe; floor asserted ≥ 0.8).
     *
-    * The probe set is expressed as `bit_count(bucket XOR qbucket) <=
-    * maxHamming` — a cheap one-pass filter that still SCANS the full
-    * corpus. The at-scale form is [[lshTopKPartitioned]] over a
-    * [[writeLshPartitioned]] layout, where the same probe set is an
-    * explicit partition-id list and the scan reads only the probed
-    * directories (plan-asserted in AnnRecallSpec).
+    * This form SCANS the full corpus to bucket it; the at-scale form is
+    * [[lshTopKPartitioned]], whose scan reads only the probed directories
+    * of a [[writeLshPartitioned]] layout (plan-asserted in AnnRecallSpec).
     */
   def lshMultiProbeTopK(emb: DataFrame, queryId: Long, k: Int,
-      maxHamming: Int = 1): DataFrame = {
-    requireQueryExists(emb, queryId)
-    val withBucket = emb
-      .withColumn("qv", quantize(col("embedding")))
-      .withColumn("bucket", lshBucket(col("qv")))
-    val q = withBucket.filter(col("vec_id") === queryId)
-      .select(col("qv").as("query_v"), col("bucket").as("qbucket"))
-    withBucket
-      .crossJoin(broadcast(q))
-      .filter(bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= maxHamming &&
-        col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), col("query_v")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+      maxHamming: Int = 1): DataFrame =
+    corpusTopK(emb, queryId, k)(lshTopKBatch(emb, _, k, maxHamming))
 
   /** Materialize the ANN-ready LSH layout: quantized vectors partitioned
     * on disk by sign-bucket id (`.../bucket=N/`). The multi-probe
@@ -488,12 +482,10 @@ object Similarity {
     }.sum
   }
 
-  /** Multi-probe LSH top-k over a [[writeLshPartitioned]] layout: the
-    * probe set (every bucket id within hamming ≤ `maxHamming` of the
-    * query's) is enumerated driver-side (2^p ids, p ≤ ~20) and pushed as
-    * an IN filter on the partition column — the scan prunes to the probed
-    * directories (`PartitionFilters`, plan-asserted in AnnRecallSpec).
-    * Candidates, scores, and ordering are identical to
+  /** Multi-probe LSH top-k over a [[writeLshPartitioned]] layout:
+    * [[lshTopKBatchPartitioned]] over the one-row query set, so the scan
+    * prunes to the query's probe ball (`PartitionFilters`, plan-asserted
+    * in AnnRecallSpec). Candidates, scores, and ordering are identical to
     * [[lshMultiProbeTopK]] on the same corpus.
     *
     * AT SCALE pass `queryVec` (the already-quantized query — external
@@ -504,29 +496,10 @@ object Similarity {
   def lshTopKPartitioned(spark: org.apache.spark.sql.SparkSession, path: String,
       queryId: Long, k: Int, maxHamming: Int = 1,
       numPlanes: Int = NumPlanes,
-      queryVec: Option[Seq[Long]] = None): DataFrame = {
-    requirePlanesMatch(spark, path, numPlanes)
-    val layout = spark.read.parquet(path)
-    val qv = queryVec.getOrElse {
-      val qRow = layout.filter(col("vec_id") === queryId).select("qv").collect()
-      require(qRow.nonEmpty, s"query vector $queryId not found in layout $path")
-      qRow.head.getSeq[Long](0)
-    }
-    val qbucket = lshBucketOf(qv, numPlanes = numPlanes)
-    // generate the hamming ball directly — C(p, ≤h) ids — instead of
-    // filtering all 2^p: at p=20, h=1 that is 21 probe ids, not a
-    // million-element scan feeding a million-literal IN filter
-    // distinct flip masks XOR'd with one fixed bucket stay distinct, so
-    // the ball needs no dedup pass
-    val probes = (0 to maxHamming).flatMap(h =>
-      (0 until numPlanes).combinations(h).map(
-        _.foldLeft(qbucket)((b, i) => b ^ (1L << i))))
-    layout
-      .filter(col("bucket").isin(probes: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), typedLit(qv)).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+      queryVec: Option[Seq[Long]] = None): DataFrame =
+    oneQuery(layoutQuery(spark, path, queryId, queryVec), k,
+      s"query vector $queryId not found in layout $path")(
+      lshTopKBatchPartitioned(spark, path, _, k, maxHamming, numPlanes))
 
   /** The quantized-layout projection shared by the batch writer and the
     * streaming index maintainer: (vec_id, code `array<tinyint>`, scale m,
@@ -657,7 +630,7 @@ object Similarity {
   /** Materialize the IVF layout: quantized vectors partitioned by inverted
     * list (`.../data/cent_id=N/`) plus the codebook at `<path>/codebook`
     * (k × dims longs — driver-sized by definition). Default codebook is
-    * the deterministic first-`centroids` one ([[ivfAssign]] parity); pass
+    * the deterministic first-`centroids` one ([[ivfTopK]] parity); pass
     * a trained [[kmeansCodebook]] for the k-means path — the layout and
     * probe mechanics are identical.
     */
@@ -672,52 +645,19 @@ object Similarity {
       .write.partitionBy("cent_id").mode("overwrite").parquet(s"$path/data")
   }
 
-  /** Multi-probe IVF top-k over a [[writeIvfPartitioned]] layout: probe
-    * centroids are picked driver-side against the stored codebook (same
-    * exact-integer dot / double cosine as the distributed path, so the
-    * probe choice is bit-identical to [[ivfMultiProbeTopK]]) and pushed as
-    * an IN filter on the `cent_id` partition column — the scan reads only
-    * the probed inverted lists. AT SCALE pass `queryVec` — see
-    * [[lshTopKPartitioned]].
+  /** Multi-probe IVF top-k over a [[writeIvfPartitioned]] layout:
+    * [[ivfTopKBatchPartitioned]] over the one-row query set — probe
+    * centroids picked against the stored codebook (bit-identical to
+    * [[ivfMultiProbeTopK]]'s pick) and pushed as an IN filter on the
+    * `cent_id` partition column, so the scan reads only the probed
+    * inverted lists. AT SCALE pass `queryVec` — see [[lshTopKPartitioned]].
     */
   def ivfTopKPartitioned(spark: org.apache.spark.sql.SparkSession, path: String,
       queryId: Long, k: Int, nprobe: Int = 2,
-      queryVec: Option[Seq[Long]] = None): DataFrame = {
-    def ldot(a: Seq[Long], b: Seq[Long]): Long =
-      a.iterator.zip(b.iterator).map { case (x, y) => x * y }.sum
-    def lcos(a: Seq[Long], b: Seq[Long]): Double =
-      ldot(a, b).toDouble / (math.sqrt(ldot(a, a).toDouble) * math.sqrt(ldot(b, b).toDouble))
-    val cents = spark.read.parquet(s"$path/codebook").collect()
-      .map(r => (r.getLong(r.fieldIndex("cent_id")),
-        r.getSeq[Long](r.fieldIndex("cv"))))
-    val data = spark.read.parquet(s"$path/data")
-    val qv = queryVec.getOrElse {
-      val qRow = data.filter(col("vec_id") === queryId).select("qv").collect()
-      require(qRow.nonEmpty, s"query vector $queryId not found in layout $path")
-      qRow.head.getSeq[Long](0)
-    }
-    // a zero-norm vector makes the driver lcos silently NaN where the
-    // distributed cosine THROWS (ANSI double division by zero — pinned
-    // by GraftSession.tune); reject loudly so both entry points fail the
-    // same data instead of this one probing garbage lists. (Under a
-    // non-ANSI session the distributed path would instead NULL the
-    // cosine and rank that centroid last; this check is deliberately
-    // stricter there — fail-fast over silently probing a degenerate
-    // list.) With norms non-zero, cc is never NaN and the plain
-    // (-cc, cid) sort is exactly the distributed orderBy(cc.desc, cent_id)
-    require(ldot(qv, qv) != 0L, "zero-norm query vector")
-    val probes = cents.map { case (cid, cv) =>
-        require(ldot(cv, cv) != 0L,
-          s"zero-norm centroid $cid in codebook $path/codebook")
-        (cid, lcos(qv, cv))
-      }
-      .sortBy { case (cid, cc) => (-cc, cid) }.take(nprobe).map(_._1).toSeq
-    data
-      .filter(col("cent_id").isin(probes: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), typedLit(qv)).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+      queryVec: Option[Seq[Long]] = None): DataFrame =
+    oneQuery(layoutQuery(spark, s"$path/data", queryId, queryVec), k,
+      s"query vector $queryId not found in layout $path", nonZero = true)(
+      ivfTopKBatchPartitioned(spark, path, _, k, nprobe))
 
   /** Materialize the IVF+PQ layout — the full FAISS-IVFPQ index shape:
     * inverted lists as `cent_id` partition directories, each vector
@@ -800,61 +740,19 @@ object Similarity {
     } finally { assigned.unpersist(); () }
   }
 
-  /** Pruned ADC top-k over a [[writeIvfPq]] layout: probe centroids are
-    * picked driver-side against the stored coarse codebook (the
-    * bit-identical [[ivfTopKPartitioned]] ranking) and pushed as a
-    * `cent_id` partition IN filter; the scan then scores
-    * `⟨q, v⟩ ≈ ⟨q, c⟩ + Σ_s tab_s[code_s]` — the residual-ADC identity
-    * `v ≈ c + r̂` — where the `m × kCent` tables (`⟨q_s, C_sc⟩`) and the
-    * per-list `⟨q, c⟩` constants fold into the scan as literal
-    * `element_at` lookups. Per-row cost: `m` array indexings, one add,
-    * one divide — over `m` bytes + one long of I/O per vector.
-    * Zero-norm vectors guard to 0; the rerank fetches shortlist vectors
-    * from the primary store ([[quantizedTopKPruned]] contract).
+  /** Pruned ADC top-k over a [[writeIvfPq]] layout: [[ivfPqTopKBatch]]
+    * over the one-row query set `(excludeId, queryVec)` — probe lists
+    * picked against the stored coarse codebook and pushed as a `cent_id`
+    * partition IN filter, each vector scored by the residual-ADC identity
+    * `⟨q, v⟩ ≈ ⟨q, c⟩ + Σ_s tab_s[code_s]`. Zero-norm vectors guard to 0;
+    * the rerank fetches shortlist vectors from the primary store
+    * ([[quantizedTopKPruned]] contract).
     */
   def ivfPqTopKPruned(spark: org.apache.spark.sql.SparkSession, path: String,
       queryVec: Seq[Long], excludeId: Long, k: Int, nprobe: Int = 2,
-      m: Int = 8): DataFrame = {
-    val qv = queryVec.toArray
-    val qn = ldot(qv, qv)
-    require(qn != 0L, "zero-norm query vector")
-    require(qv.length % m == 0, s"dims=${qv.length} not divisible by m=$m")
-    val sub = qv.length / m
-    def lcos(a: Array[Long], b: Array[Long]): Double =
-      ldot(a, b).toDouble / (math.sqrt(ldot(a, a).toDouble) * math.sqrt(ldot(b, b).toDouble))
-    val cents = spark.read.parquet(s"$path/codebook").collect()
-      .map(r => (r.getLong(r.fieldIndex("cent_id")),
-        r.getSeq[Long](r.fieldIndex("cv")).toArray))
-    val probes = cents.map { case (cid, cv) =>
-        require(ldot(cv, cv) != 0L,
-          s"zero-norm centroid $cid in codebook $path/codebook")
-        (cid, lcos(qv, cv))
-      }
-      .sortBy { case (cid, cc) => (-cc, cid) }.take(nprobe)
-      .map(_._1).toSeq
-    val pq = spark.read.parquet(s"$path/pq").collect()
-      .map(r => ((r.getInt(r.fieldIndex("s")), r.getInt(r.fieldIndex("c"))),
-        r.getSeq[Long](r.fieldIndex("pv")).toArray)).toMap
-    val kCent = pq.keys.map(_._2).max + 1
-    val tab = Array.tabulate(m, kCent) { (s, c) =>
-      ldot(qv.slice(s * sub, (s + 1) * sub), pq((s, c)))
-    }
-    val qcDot = cents.map { case (cid, cv) => (cid, ldot(qv, cv)) }
-    val qcLit = map_from_arrays(
-      typedLit(qcDot.map(_._1).toSeq), typedLit(qcDot.map(_._2).toSeq))
-    val adc = (0 until m).map { s =>
-      element_at(typedLit(tab(s).toSeq), col("code")(s).cast("int") + 1)
-    }.reduce(_ + _)
-    spark.read.parquet(s"$path/data")
-      .filter(col("cent_id").isin(probes: _*) && col("vec_id") =!= excludeId)
-      .select(col("vec_id"),
-        when(col("nrm2") === 0, lit(0.0)).otherwise(
-          (adc + element_at(qcLit, col("cent_id").cast("long"))).cast("double") /
-            (sqrt(col("nrm2").cast("double")) * sqrt(lit(qn).cast("double"))))
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+      m: Int = 8): DataFrame =
+    oneQuery(layoutQuery(spark, path, excludeId, Some(queryVec)), k,
+      "no query vector", nonZero = true)(ivfPqTopKBatch(spark, path, _, k, nprobe, m))
 
   /** Build a batch-query relation from corpus members: (query_id, qv)
     * with the vector already quantized — the input contract of the
@@ -868,8 +766,8 @@ object Similarity {
   /** Per-query top-k rank over a scored candidate relation
     * (query_id, vec_id, score): ONE window partitioned by query — a
     * shuffle of the candidate-bounded set only, never the corpus.
-    * row_number (not limit) because limit is global; ordering matches the
-    * single-query entry points (score desc, vec_id).
+    * row_number (not limit) because limit is global; (score desc, vec_id)
+    * is the order the single-query entry points return.
     */
   private def rankPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("vec_id"))
@@ -889,16 +787,22 @@ object Similarity {
   private def bjIf(small: Boolean)(df: DataFrame): DataFrame =
     if (small) broadcast(df) else df
 
-  /** Materialize the query relation ONCE (eager localCheckpoint): the
-    * guard count, the probe-union collect, and the candidate join would
-    * otherwise each re-evaluate the caller's query expression — commonly
-    * a corpus filter, so one extra full scan per consumer. Query sets
-    * are small by contract, so the checkpointed blocks are negligible,
-    * and lineage truncation keeps the downstream plans flat; the blocks
-    * release when the relation is garbage-collected.
+  /** The query set (query_id, qv) and whether it is broadcast-sized: at
+    * most `maxBroadcastQueries + 1` rows collected in one pass. At or
+    * under the bound they come back as a driver-local relation, which the
+    * probe-union collect and the candidate join read without re-evaluating
+    * the caller's expression (commonly a corpus filter), and no block is
+    * left to lose; over it the caller's expression is returned, for each
+    * consumer to recompute.
     */
-  private def materializedQueries(queries: DataFrame): DataFrame =
-    queries.select(col("query_id"), col("qv")).localCheckpoint(true)
+  private def materializedQueries(queries: DataFrame,
+      maxBroadcastQueries: Long): (DataFrame, Boolean) = {
+    val qs = queries.select(col("query_id"), col("qv"))
+    val cap = (math.max(-1L, math.min(maxBroadcastQueries, Int.MaxValue - 1L)) + 1).toInt
+    val rows = qs.limit(cap).collect()
+    if (rows.length <= maxBroadcastQueries) (localRelation(qs, rows), true)
+    else (qs, false)
+  }
 
   /** Batch multi-probe LSH top-k: score a whole query SET in ONE job —
     * the at-scale retrieval shape for matching millions of eval/dedup
@@ -916,17 +820,14 @@ object Similarity {
     * (query, vector) pair matches at most one probe — no dedup pass.
     *
     * `queries` contract: (query_id, qv) — see [[batchQueries]].
-    * Result identity with N [[lshMultiProbeTopK]] calls is spec-pinned
-    * (BatchAnnSpec).
     */
   def lshTopKBatch(emb: DataFrame, queries: DataFrame, k: Int,
       maxHamming: Int = 1, numPlanes: Int = NumPlanes,
       maxBroadcastQueries: Long = 100000L): DataFrame = {
-    val q0 = materializedQueries(queries)
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val withBucket = emb
       .withColumn("qv", quantize(col("embedding")))
       .withColumn("bucket", lshBucket(col("qv"), numPlanes = numPlanes))
-    val small = q0.count() <= maxBroadcastQueries
     val probes = lshProbes(q0, maxHamming, numPlanes)
     val cand = withBucket
       .join(bjIf(small)(probes), "bucket")
@@ -969,9 +870,8 @@ object Similarity {
       numPlanes: Int = NumPlanes, maxBroadcastQueries: Long = 100000L,
       maxProbeLiterals: Int = 4096): DataFrame = {
     requirePlanesMatch(spark, path, numPlanes)
-    val q0 = materializedQueries(queries)
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val layout = spark.read.parquet(path)
-    val small = q0.count() <= maxBroadcastQueries
     val probes = lshProbes(q0, maxHamming, numPlanes)
     val probedBuckets =
       probes.select("bucket").distinct().limit(maxProbeLiterals + 1).collect()
@@ -999,8 +899,7 @@ object Similarity {
     */
   def bruteForceTopKBatch(emb: DataFrame, queries: DataFrame, k: Int,
       maxBroadcastQueries: Long = 100000L): DataFrame = {
-    val q0 = materializedQueries(queries)
-    val small = q0.count() <= maxBroadcastQueries
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val q = bjIf(small)(q0.select(col("query_id"), col("qv").as("query_v")))
     val cand = emb
       .withColumn("qv", quantize(col("embedding")))
@@ -1012,8 +911,8 @@ object Similarity {
   }
 
   /** Batch PQ top-k: the whole query set scores in ONE job, like
-    * [[lshTopKBatch]] — no driver collect of queries, no per-query
-    * jobs. Each query's ADC tables (`m × kCent` dot products against
+    * [[lshTopKBatch]] — no per-query driver work, no per-query jobs.
+    * Each query's ADC tables (`m × kCent` dot products against
     * the literal codebook) are computed DISTRIBUTED as a projection of
     * the query relation itself, then ride the (size-guarded) broadcast
     * into the scan; per (vector, query) pair the score costs `m`
@@ -1037,15 +936,14 @@ object Similarity {
     val sub = dims / m
     val cb = pqCodebook(emb, m, kCent, dims, stride)
     val cc2 = cb.map(_.map(c => ldot(c, c)))
-    val q0 = materializedQueries(queries)
-    val small = q0.count() <= maxBroadcastQueries
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val tabs = array((for (s <- 0 until m; c <- 0 until kCent)
       yield qdot(slice(col("qv"), s * sub + 1, sub),
         typedLit(cb(s)(c).toSeq))): _*)
     val q = bjIf(small)(q0.select(col("query_id"), tabs.as("_tabs"),
       qnorm2(col("qv")).as("_qn")))
     val coded = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("codes", pqCodes(col("qv"), cb, cc2, m, kCent, sub))
+      .withColumn("codes", graft.plans.PqEncode(col("qv"), cb, cc2))
       .withColumn("_vn", qnorm2(col("qv")))
     val approxDot = (0 until m).map { s =>
       element_at(col("_tabs"), lit(s * kCent) + col("codes")(s) + 1)
@@ -1147,17 +1045,18 @@ object Similarity {
     * oracle's ORDER BY never sees), sliced to `nprobe`, exploded. The
     * corpus is assigned map-side ([[assignToCentroidsLit]], zero
     * exchange), candidates come from an equi-join on `cent_id`, and ONE
-    * window ranks all queries. Probe choice is bit-identical to
-    * [[ivfMultiProbeTopK]]'s (same exact-integer dot, same double
-    * cosine), so batch(q) == single(q) row-for-row — spec-pinned.
+    * window ranks all queries. At `nprobe = 1` a query's probe IS its
+    * assigned centroid (same exact-integer dot, same double cosine, same
+    * lowest-id tie break as [[assignToCentroidsLit]]), which is what
+    * [[ivfTopK]] and [[ivfKmeansTopK]] rely on.
     */
   def ivfTopKBatch(emb: DataFrame, queries: DataFrame, k: Int,
       centroids: Int = 16, nprobe: Int = 2,
       maxBroadcastQueries: Long = 100000L,
       codebook: Option[DataFrame] = None): DataFrame = {
-    val q0 = materializedQueries(queries)
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val q = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-    // default codebook = deterministic first-k ([[ivfMultiProbeTopK]]
+    // default codebook = deterministic first-k ([[writeIvfPartitioned]]
     // parity); pass a trained [[kmeansCodebook]] for the k-means path —
     // probe mechanics identical, only training differs
     val cb = codebook
@@ -1167,7 +1066,6 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
     val assigned = assignToCentroidsLit(q, cb)
-    val small = q0.count() <= maxBroadcastQueries
     val probes = ivfProbes(q0, cb, nprobe)
     val cand = assigned
       .join(bjIf(small)(probes), "cent_id")
@@ -1180,8 +1078,8 @@ object Similarity {
   /** (query_id, query_v, cent_id) — each query's `nprobe` highest-cosine
     * centroids from a literal codebook, computed map-side (no per-query
     * driver work). Centroid norms are precomputed with the same Long-exact
-    * sum + Math.sqrt as [[assignToCentroidsLit]], so probe picks match
-    * the single-query path bit-for-bit.
+    * sum + Math.sqrt as [[assignToCentroidsLit]], so a query's top probe
+    * is its assigned centroid bit-for-bit.
     */
   private def ivfProbes(queries: DataFrame, cb: Seq[(Long, Seq[Long])],
       nprobe: Int): DataFrame = {
@@ -1189,6 +1087,7 @@ object Similarity {
     val qn = sqrt(qnorm2(col("qv")).cast("double"))
     val entries = cb.map { case (id, cv) =>
       val cvn = math.sqrt(cv.map(x => x * x).sum.toDouble)
+      require(cvn != 0.0, s"zero-norm centroid $id in the IVF codebook")
       struct(
         (qdot(col("qv"), typedLit(cv)).cast("double") / (qn * lit(cvn))).as("cc"),
         lit(-id).as("ncid"))
@@ -1210,12 +1109,11 @@ object Similarity {
   def ivfTopKBatchPartitioned(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, k: Int, nprobe: Int = 2,
       maxBroadcastQueries: Long = 100000L): DataFrame = {
-    val q0 = materializedQueries(queries)
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val cb = spark.read.parquet(s"$path/codebook").collect()
       .map(r => (r.getLong(r.fieldIndex("cent_id")),
         r.getSeq[Long](r.fieldIndex("cv")))).toSeq.sortBy(_._1)
     val layout = spark.read.parquet(s"$path/data")
-    val small = q0.count() <= maxBroadcastQueries
     val probes = ivfProbes(q0, cb, nprobe)
     // the probe union is bounded by the codebook size — always literal-safe
     val probedCents = probes.select("cent_id").distinct().collect()
@@ -1231,21 +1129,19 @@ object Similarity {
   /** Batch ADC retrieval over a [[writeIvfPq]] layout — the full
     * 100 TB batch-serving shape: a query SET scores the compressed
     * partitioned index in ONE job. Probe lists come from [[ivfProbes]]
-    * (distributed, bit-identical to the single-query pick); the probe
+    * (distributed, bit-identical to [[ivfTopKBatchPartitioned]]'s); the probe
     * UNION (codebook-bounded) pushes as a static `cent_id` partition IN
     * filter; each query's `m × kCent` ADC tables, its norm, and its
     * per-probed-list `⟨q, c⟩` constant are computed DISTRIBUTED as a
     * projection of the probe relation riding the size-guarded broadcast
-    * (no driver collect of queries, no per-query jobs — the
-    * [[pqTopKBatch]] lesson); the scan then costs `m` array indexings +
-    * one add + one divide per (query, vector) over `m` bytes of I/O.
-    * Row-for-row identical to [[ivfPqTopKPruned]] per query
-    * (spec-pinned).
+    * (no per-query driver work, no per-query jobs — the [[pqTopKBatch]]
+    * lesson); the scan then costs `m` array indexings + one add + one
+    * divide per (query, vector) over `m` bytes of I/O.
     */
   def ivfPqTopKBatch(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 2, m: Int = 8,
       maxBroadcastQueries: Long = 100000L): DataFrame = {
-    val q0 = materializedQueries(queries)
+    val (q0, small) = materializedQueries(queries, maxBroadcastQueries)
     val cb = spark.read.parquet(s"$path/codebook").collect()
       .map(r => (r.getLong(r.fieldIndex("cent_id")),
         r.getSeq[Long](r.fieldIndex("cv")))).toSeq.sortBy(_._1)
@@ -1256,7 +1152,6 @@ object Similarity {
     val dims = cb.head._2.length
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val sub = dims / m
-    val small = q0.count() <= maxBroadcastQueries
     val probes = ivfProbes(q0, cb, nprobe)
     // the probe union is bounded by the codebook size — always literal-safe
     val probedCents = probes.select("cent_id").distinct().collect()
@@ -1288,21 +1183,6 @@ object Similarity {
             (sqrt(col("nrm2").cast("double")) * sqrt(col("_qn").cast("double"))))
           .as("score"))
     rankPerQuery(cand, k)
-  }
-
-  /** IVF-style bucketing: the first `k` vectors (by vec_id) act as
-    * deterministic "centroids"; every vector is assigned to its
-    * highest-cosine centroid (ties → lowest centroid id). A query then
-    * scans only its centroid's inverted list — candidates ≈ N/k on
-    * balanced data. Deterministic stand-in for a k-means codebook: the
-    * assignment/search mechanics (the part that matters for the plan
-    * shape at scale) are identical, only the codebook training differs.
-    */
-  def ivfAssign(emb: DataFrame, centroids: Int): DataFrame = {
-    val q = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-    val cents = q.filter(col("vec_id") < centroids)
-      .select(col("vec_id").as("cent_id"), col("qv").as("cv"))
-    assignToCentroids(q, cents)
   }
 
   /** Assign every vector to its highest-cosine centroid from an explicit
@@ -1399,65 +1279,35 @@ object Similarity {
   }
 
   /** IVF top-k over a k-means-trained codebook: train, assign, scan only
-    * the query's inverted list.
+    * the query's inverted list — [[ivfTopKBatch]] at `nprobe = 1` over
+    * the one-row query set, with the [[kmeansCodebook]] codebook.
     */
   def ivfKmeansTopK(emb: DataFrame, queryId: Long, k: Int,
-      centroids: Int = 8, iters: Int = 2): DataFrame = {
-    val cents = kmeansCodebook(emb, centroids, iters)
-    val q = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-    val assigned = assignToCentroids(q, cents)
-    val qv = assigned.filter(col("vec_id") === queryId)
-      .select(col("qv").as("query_v"), col("cent_id").as("qcent"))
-    assigned
-      .crossJoin(broadcast(qv))
-      .filter(col("cent_id") === col("qcent") && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), col("query_v")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+      centroids: Int = 8, iters: Int = 2): DataFrame =
+    corpusTopK(emb, queryId, k)(ivfTopKBatch(emb, _, k, centroids,
+      nprobe = 1, codebook = Some(kmeansCodebook(emb, centroids, iters))))
 
   /** Multi-probe IVF top-k: scan the inverted lists of the query's
     * `nprobe` highest-cosine centroids instead of only the nearest — the
     * standard IVF recall lift (a query near a Voronoi boundary finds its
     * neighbors in the second-closest list). Candidates ≈ nprobe/centroids
-    * of the corpus on balanced data; the probe set is an `nprobe`-row
-    * broadcast join, so the plan stays broadcast-only. Measured recall@10
-    * on the AnnRecallSpec clustered corpus at 16 centroids: 0.70
-    * single-probe → 0.875 at nprobe=2 (floor asserted ≥ 0.8).
+    * of the corpus on balanced data. [[ivfTopKBatch]] over the one-row
+    * query set. Measured recall@10 on the AnnRecallSpec clustered corpus
+    * at 16 centroids: 0.70 single-probe → 0.875 at nprobe=2 (floor
+    * asserted ≥ 0.8).
     */
   def ivfMultiProbeTopK(emb: DataFrame, queryId: Long, k: Int,
-      centroids: Int = 16, nprobe: Int = 2): DataFrame = {
-    val q = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-    val cents = q.filter(col("vec_id") < centroids)
-      .select(col("vec_id").as("cent_id"), col("qv").as("cv"))
-    val assigned = assignToCentroids(q, cents)
-    val qv = q.filter(col("vec_id") === queryId)
-    val probes = qv.crossJoin(broadcast(cents))
-      .select(col("cent_id"), cosine(col("qv"), col("cv")).as("cc"))
-      .orderBy(col("cc").desc, col("cent_id"))
-      .limit(nprobe)
-      .select("cent_id")
-    assigned
-      .join(broadcast(probes), "cent_id")
-      .crossJoin(broadcast(qv.select(col("qv").as("query_v"))))
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), col("query_v")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+      centroids: Int = 16, nprobe: Int = 2): DataFrame =
+    corpusTopK(emb, queryId, k)(ivfTopKBatch(emb, _, k, centroids, nprobe))
 
-  /** IVF top-k: scan only the query vector's inverted list. */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, centroids: Int = 16): DataFrame = {
-    val assigned = ivfAssign(emb, centroids)
-    val q = assigned.filter(col("vec_id") === queryId)
-      .select(col("qv").as("query_v"), col("cent_id").as("qcent"))
-    assigned
-      .crossJoin(broadcast(q))
-      .filter(col("cent_id") === col("qcent") && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosine(col("qv"), col("query_v")).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+  /** IVF top-k over the deterministic first-`centroids` codebook (the
+    * first vectors by vec_id act as centroids — the assignment and search
+    * mechanics of a k-means codebook, without the training): scan only
+    * the query vector's inverted list — [[ivfMultiProbeTopK]] at
+    * `nprobe = 1`.
+    */
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, centroids: Int = 16): DataFrame =
+    ivfMultiProbeTopK(emb, queryId, k, centroids, nprobe = 1)
 
   /** Hyperplane count for [[nearestNeighborPerVector]]'s candidate buckets
     * (shared with the oracle SQL): 2^NnPlanes buckets per label block.

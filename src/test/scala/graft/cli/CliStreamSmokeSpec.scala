@@ -58,6 +58,13 @@ class CliStreamSmokeSpec extends AnyFunSuite {
     assert(c3 == 2, s"expected usage exit 2:\n$log3")
     assert(log3.contains("--forward-fill requires --exact") &&
       log3.contains("usage:"), log3)
+    // tumbling stream windows are whole milliseconds: a fractional width
+    // is refused, never truncated (10.7 → 10) nor a stack trace (0.5 → 0)
+    Seq("0.5", "10.7").foreach { w =>
+      val (c, log) = run("--if", "in_dir", "--stream-file", "--cache", w)
+      assert(c == 2, s"expected usage exit 2 for --cache $w:\n$log")
+      assert(log.contains("takes whole milliseconds") && log.contains("usage:"), log)
+    }
   }
 
   /** Runs the batch CLI on `fixtures/mini.log` with `--file` and `flags`

@@ -83,15 +83,27 @@ class AnnRecallSpec extends AnyFunSuite {
     assert(r >= 0.90, f"IVF-kmeans recall $r%.3f fell below the documented floor of 0.90")
   }
 
+  /** FileSourceScans through AQE wrappers: the per-query rank window is
+    * a shuffle, so the root is an AdaptiveSparkPlanExec whose scans only
+    * appear via its current physical plan and materialized query stages.
+    */
+  private def scansOf(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        scansOf(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        scansOf(q.plan)
+    }.flatten
+
   /** The scan of a partitioned-layout query must carry a partition filter
     * on the layout's partition column AND touch only the probed subset of
     * partition directories — the at-scale property the layout exists for.
     */
   private def assertPruned(df: org.apache.spark.sql.DataFrame,
       partCol: String, maxParts: Int): Unit = {
-    val scans = df.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
+    val scans = scansOf(df.queryExecution.executedPlan)
     val pruned = scans.filter(_.partitionFilters
       .exists(_.references.exists(_.name == partCol)))
     assert(pruned.nonEmpty,
@@ -342,11 +354,36 @@ class AnnRecallSpec extends AnyFunSuite {
     // matching planes still work (sidecar round-trips)
     assert(Similarity.quantizedTopKPruned(spark, lp, q0, 7L, K,
       numPlanes = 8).count() == K)
-    // typoed query id fails fast instead of returning an empty top-k
-    val e4 = intercept[IllegalArgumentException] {
-      Similarity.bruteForceTopK(emb, 999999L, K)
+    // typoed query id fails fast instead of returning an empty top-k, on
+    // every single-query entry and layout
+    val lshPath = java.nio.file.Files.createTempDirectory("lsh_missing").toString
+    Similarity.writeLshPartitioned(emb, lshPath)
+    val ivfPath = java.nio.file.Files.createTempDirectory("ivf_missing").toString
+    Similarity.writeIvfPartitioned(emb, ivfPath)
+    val missing = 999999L
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "bruteForceTopK" -> (() => Similarity.bruteForceTopK(emb, missing, K)),
+      "lshTopK" -> (() => Similarity.lshTopK(emb, missing, K)),
+      "lshMultiProbeTopK" -> (() => Similarity.lshMultiProbeTopK(emb, missing, K)),
+      "lshTopKPartitioned" ->
+        (() => Similarity.lshTopKPartitioned(spark, lshPath, missing, K)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(emb, missing, K)),
+      "ivfMultiProbeTopK" -> (() => Similarity.ivfMultiProbeTopK(emb, missing, K)),
+      "ivfKmeansTopK" -> (() => Similarity.ivfKmeansTopK(emb, missing, K)),
+      "ivfTopKPartitioned" ->
+        (() => Similarity.ivfTopKPartitioned(spark, ivfPath, missing, K))
+    ).foreach { case (entry, topK) =>
+      val e4 = intercept[IllegalArgumentException](topK())
+      assert(e4.getMessage.contains("not found"), s"$entry: ${e4.getMessage}")
     }
-    assert(e4.getMessage.contains("not found"))
+    // ivfPqTopKPruned takes the query vector itself, so there is no id to
+    // miss; a zero vector, whose probe pick would divide by zero, is refused
+    val pqPath = java.nio.file.Files.createTempDirectory("ivfpq_zero").toString
+    Similarity.writeIvfPq(emb, pqPath, stride = 29L)
+    val e6 = intercept[IllegalArgumentException] {
+      Similarity.ivfPqTopKPruned(spark, pqPath, Seq.fill(Dims)(0L), missing, K)
+    }
+    assert(e6.getMessage.contains("zero-norm query vector"), e6.getMessage)
     // a vector longer than the projection dims raises instead of
     // silently ranking on its first 64 components
     val long = Seq((1L, Seq.fill(80)(1000L))).toDF("vec_id", "pv")

@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   *
   *  1. IDENTITY — batch(Q) restricted to one query equals the single-query
   *     entry point for every query in the set (same candidates, scores,
-  *     order), so a caller can switch APIs without a result shift;
+  *     order). Each single-query entry is its batch twin run over a one-row
+  *     query set, so this pins that a query's rows do not depend on the
+  *     other members of its set, and that the single form returns them in
+  *     (score desc, vec_id) order;
   *  2. ONE SCAN — the whole query set is answered by ONE scan of the
   *     corpus/layout (no per-query jobs): asserted as exactly one
   *     FileSourceScan of the layout in the partitioned plans, carrying a
@@ -16,7 +19,9 @@ import org.apache.spark.sql.functions._
   *     union;
   *  3. the broadcast guard keeps the probe relation broadcast for small
   *     query sets and demotes to shuffle above the threshold without
-  *     changing results.
+  *     changing results;
+  *  4. NO BLOCKS — a batch result persists nothing it later needs, so the
+  *     loss of an executor's blocks cannot fail it.
   */
 class BatchAnnSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
@@ -152,12 +157,13 @@ class BatchAnnSpec extends AnyFunSuite {
         assert(batchSlice(batch, q) == single,
           s"batch IVF+PQ diverges from single-query ADC for query $q")
       }
-      // plan assertion on an UNCACHED build — InMemoryTableScan would
-      // hide the FileSourceScan the assertion looks for
-      assertOnePrunedScan(
-        Similarity.ivfPqTopKBatch(spark, path, queries, K),
-        "cent_id", maxParts = 16)
     } finally { batch.unpersist(); () }
+    // plan assertion on an UNCACHED build, after the unpersist: a rebuild
+    // over the same driver-local query set is the same plan, which the
+    // cache would answer with an InMemoryTableScan hiding the scan
+    assertOnePrunedScan(
+      Similarity.ivfPqTopKBatch(spark, path, queries, K),
+      "cent_id", maxParts = 16)
   }
 
   test("mrrAtK: first-hit reciprocal in micro-units; no-hit queries " +
@@ -323,5 +329,26 @@ class BatchAnnSpec extends AnyFunSuite {
       guarded.orderBy(col("query_id"), col("score").desc, col("vec_id")).collect().toSeq ==
       approx.orderBy(col("query_id"), col("score").desc, col("vec_id")).collect().toSeq,
       "shuffle-join fallback changed batch PQ results")
+  }
+
+  test("batch ANN results survive the loss of every block the call persisted") {
+    // a lost executor takes its cached and locally checkpointed blocks
+    // with it; the top-k must recompute from lineage, not fail with
+    // "Checkpoint block ... not found"
+    val path = java.nio.file.Files.createTempDirectory("batch_loss").toString
+    Similarity.writeIvfPartitioned(emb, path)
+    def build() = Seq(Similarity.lshTopKBatch(emb, queries, K),
+      Similarity.ivfTopKBatchPartitioned(spark, path, queries, K))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("query_id"), col("score").desc, col("vec_id")).collect().toSeq
+    val undisturbed = build().map(ranked)
+    val sc = spark.sparkContext
+    // ids, not all of them: an earlier test's persisted RDDs are not
+    // this call's to drop
+    val before = sc.getPersistentRDDs.keySet
+    val built = build()
+    (sc.getPersistentRDDs.keySet -- before).foreach(id =>
+      org.apache.spark.SparkEnv.get.blockManager.master.removeRdd(id, blocking = true))
+    assert(built.map(ranked) == undisturbed)
   }
 }

@@ -305,6 +305,26 @@ class OpsSpec extends AnyFunSuite {
     assert(top(0).getDouble(1) == 1.0 && top(1).getDouble(1) == 0.0 && top(2).getDouble(1) == -1.0)
   }
 
+  test("quantize: the exact float32 x 1000, rounded half away from zero, " +
+      "and the oracle CTE multiplies the same way") {
+    // 0.3195f is 0.31949999928...: its exact product 319.4999992... rounds
+    // to 319, where a FLOAT product rounds to 319.5 first and then to 320.
+    // 0.0625f x 1000 is exactly 62.5: half-up gives 63 and -63 (Scala's
+    // math.round would give -62).
+    val edges = Seq(0.3195f, -0.3195f, 0.0625f, -0.0625f)
+    val ref = edges.map(f => new java.math.BigDecimal(f.toDouble * 1000)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact)
+    assert(ref == Seq(319L, -319L, 63L, -63L))
+    val got = edges.toDF("x")
+      .select(Similarity.quantize(array(col("x"))).getItem(0)).as[Long]
+      .collect().toSeq
+    assert(got == ref)
+    // the DuckDB oracle replays quantize through this one CTE; a FLOAT
+    // product there mismatched qd_cosine_nn at sf0.1 on 0.3195f
+    assert(graft.fixtures.SharedSql.quantCteBody
+      .contains("round(CAST(x AS DOUBLE)*1000)"))
+  }
+
   test("bucketed NN: full coverage, never beats exact, high recall") {
     // deterministic 64-dim vectors over 2 labels (formulaic, no RNG)
     val vecs = (0L until 40L).map { i =>

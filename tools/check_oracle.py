@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
 """Local pre-check of SparkEntry oracles: mimics the driver's compare.
 
-Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir>
+Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir> [names]
 
 Loads each <out>/<name>/ parquet (Spark result), runs the matching oracle
 SQL from <out>/oracle_sql.json in DuckDB over the sf tables, and compares
-schema + sorted rows exactly (hash-style).
+schema + sorted rows exactly (hash-style). `names` (a comma list) checks
+only those queries; without it every query in oracle_sql.json is checked.
 """
 import sys, json, glob, os
 import duckdb
@@ -27,13 +28,20 @@ def normalize(df):
                      else str(v) for v in r)
     return sorted(rows, key=key), list(df.columns)
 
-def main(outdir, sfdir):
+def main(outdir, sfdir, names=""):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     sqls = json.load(open(f"{outdir}/oracle_sql.json"))
+    wanted = [n for n in names.split(",") if n]
+    if wanted:
+        unknown = sorted(set(wanted) - set(sqls))
+        if unknown:
+            print(f"UNKNOWN {','.join(unknown)}")
+            return 1
+        sqls = {n: sqls[n] for n in wanted}
     n_pass = n_fail = 0
     for name, sql in sorted(sqls.items()):
         resdir = f"{outdir}/{name}"
@@ -81,4 +89,4 @@ def main(outdir, sfdir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))
